@@ -1,6 +1,6 @@
 """Run one benchmark workload and print its metrics.
 
-    python3 perfbench/run.py --workload kascade_batch --seed 1 --seconds 21 --trace 0
+    python3 perfbench/run.py --workload kascade_batch --seed 1 --seconds 20 --trace 0
 
 Run from the root of a checkout.  The last line of standard output is
 one JSON object: ``correct``, ``attempted``, ``failed`` and ``metrics``
@@ -209,12 +209,12 @@ def run_loop(spark, reg, workload, seed: int, seconds: float, in_dir: str, tree,
     """The closed loop: ``workloads.n_rounds`` whole rounds, about
     ``seconds`` long on the reference host.
 
-    Returns (samples, first result frame per query, errors, rounds,
-    wall seconds).  A sample is one query run: fn() plus a full
-    ``noop`` write of its result."""
+    Returns (samples, result frame per successful run id, rounds, wall
+    seconds).  A sample is one query run: fn() plus a full ``noop``
+    write of its result."""
     samples = []
-    kept = {}
-    errors: dict[str, str] = {}
+    frames = {}
+    seen: set[str] = set()
     sched = workloads.rounds(workload, seed)
     sc = spark.sparkContext
     n_rounds = workloads.n_rounds(workload, seconds)
@@ -222,7 +222,8 @@ def run_loop(spark, reg, workload, seed: int, seconds: float, in_dir: str, tree,
     for _ in range(n_rounds):
         for name in next(sched):
             rid = len(samples)
-            s = {"rid": rid, "query": name, "first": name not in kept and name not in errors}
+            s = {"rid": rid, "query": name, "first": name not in seen}
+            seen.add(name)
             cpu0 = tree.snapshot()
             s["t0"] = time.time()
             t0 = time.perf_counter()
@@ -241,10 +242,10 @@ def run_loop(spark, reg, workload, seed: int, seconds: float, in_dir: str, tree,
                     df = reg[name].fn(spark, in_dir)
                     df.write.format("noop").mode("overwrite").save()
                 s["ok"] = True
-                kept.setdefault(name, df)
+                frames[rid] = df
             except Exception:  # noqa: BLE001 - a failing query is a measured outcome
                 s["ok"] = False
-                errors.setdefault(name, traceback.format_exc(limit=3))
+                s["error"] = traceback.format_exc(limit=3)
             s["wall"] = time.perf_counter() - t0
             s["t1"] = time.time()
             cpu1 = tree.snapshot()
@@ -253,26 +254,47 @@ def run_loop(spark, reg, workload, seed: int, seconds: float, in_dir: str, tree,
                 tracer.qid = None
                 s["persisted_bytes"] = spans.persisted_bytes(spark)
             samples.append(s)
-    return samples, kept, errors, n_rounds, time.perf_counter() - t_loop
+    return samples, frames, n_rounds, time.perf_counter() - t_loop
 
 
-def check_results(spark, reg, kept: dict, errors: dict, in_dir: str) -> dict[str, list[str]]:
-    """Oracle check of each query's first result, outside the timed
-    loop: {query: problems}, empty when the result matches."""
+def check_results(spark, reg, samples, frames: dict, in_dir: str) -> dict[int, list[str]]:
+    """Oracle check of every query run, outside the timed loop:
+    {run id: problems}, empty when the run's result matches.
+
+    A run that raised has its error as its problem.  Each other run's
+    result frame - the plan its own fn() call built, with whatever
+    cache state that call met - is run again with ``toPandas()`` and
+    compared with the query's oracle on the same inputs."""
     from oracle_utils import compare_frames, duckdb_con
 
     spark.sparkContext.setJobGroup("check", "oracle check")
     con = duckdb_con(in_dir)
-    problems = {name: [f"raised: {err.strip().splitlines()[-1]}"] for name, err in errors.items()}
-    for name, df in kept.items():
-        try:
-            got = df.toPandas()
-            oracle = reg[name].oracle
-            problems[name] = [] if oracle is None else compare_frames(got, con.execute(oracle).fetchdf())
-        except Exception as e:  # noqa: BLE001 - an unreadable result is a failure
-            problems[name] = [f"check raised: {type(e).__name__}: {e}"[:500]]
-    con.close()
+    expected = {}
+    problems = {}
+    try:
+        for s in samples:
+            rid, name = s["rid"], s["query"]
+            if not s["ok"]:
+                problems[rid] = [f"raised: {s['error'].strip().splitlines()[-1]}"]
+                continue
+            try:
+                got = frames[rid].toPandas()
+                oracle = reg[name].oracle
+                if oracle is None:
+                    problems[rid] = []
+                    continue
+                if name not in expected:
+                    expected[name] = con.execute(oracle).fetchdf()
+                problems[rid] = compare_frames(got, expected[name])
+            except Exception as e:  # noqa: BLE001 - an unreadable result is a failure
+                problems[rid] = [f"check raised: {type(e).__name__}: {e}"[:500]]
+    finally:
+        con.close()
     return problems
+
+
+def problem_record(samples, problems) -> dict:
+    return {f"{s['query']}#{s['rid']}": problems[s["rid"]] for s in samples if problems.get(s["rid"])}
 
 
 def tail(values: list[float]) -> tuple[float, int]:
@@ -302,8 +324,20 @@ def metric(value: float, unit: str) -> dict:
     return {"value": value, "unit": unit}
 
 
+def mix_p50(samples) -> float:
+    """Each query's median wall time over ``samples``, then the
+    geometric mean over the queries.  The median of all samples pooled
+    would sit on whichever query is in the middle of the mix, and jump
+    from one query's times to another's when they shift a little."""
+    walls: dict[str, list[float]] = {}
+    for s in samples:
+        walls.setdefault(s["query"], []).append(s["wall"])
+    return statistics.geometric_mean(statistics.median(w) for w in walls.values())
+
+
 def failures(samples, problems) -> int:
-    return sum(1 for s in samples if not s["ok"] or problems.get(s["query"]))
+    """Runs that raised or whose result did not match the oracle."""
+    return sum(1 for s in samples if not s["ok"] or problems.get(s["rid"]))
 
 
 def end_to_end(args, workload, seed: int) -> tuple[dict, dict]:
@@ -319,28 +353,27 @@ def end_to_end(args, workload, seed: int) -> tuple[dict, dict]:
     in_dir, manifest = inputs_for(workload, seed)
     tp["gen"] = time.time()
     tree = procstat.ProcessTree()
-    tree.start_sampling()
-    samples, kept, errors, n_rounds, wall = run_loop(spark, reg, workload, seed, args.seconds, in_dir, tree)
-    peak = tree.stop_sampling()
+    samples, frames, n_rounds, wall = run_loop(spark, reg, workload, seed, args.seconds, in_dir, tree)
     tp["loop"] = time.time()
-    problems = check_results(spark, reg, kept, errors, in_dir)
+    problems = check_results(spark, reg, samples, frames, in_dir)
     tp["check"] = time.time()
     conf = conf_snapshot(spark)
     stop_session(spark)
     tp["stop"] = time.time()
     failed = failures(samples, problems)
-    walls = [s["wall"] for s in samples]
-    tail_s, tail_pct = tail(walls)
+    tail_s, tail_pct = tail([s["wall"] for s in samples])
+    cold = [s for s in samples if s["first"]]
+    # warm runs: every run but each query's first (all runs when there is one round)
+    warm = [s for s in samples if not s["first"]] or samples
     metrics = {
         "setup_s": metric(statistics.median(setup), "s"),
         "queries_per_s": metric((len(samples) - failed) / wall, "1/s"),
-        "query_s_p50": metric(statistics.median(walls), "s"),
-        "cold_query_s_p50": metric(statistics.median(s["wall"] for s in samples if s["first"]), "s"),
+        "query_s_p50": metric(mix_p50(warm), "s"),
+        "cold_query_s_p50": metric(mix_p50(cold), "s"),
         "cpu_s_per_query": metric(sum(sum(s["cpu"].values()) for s in samples) / len(samples), "s"),
     }
     record = {
         "setup_samples_s": setup,
-        "peak_rss_mb": peak / 2**20,
         "query_s_tail": tail_s,
         "phases_s": {k: tp[k] - tp[p] for p, k in zip(list(tp)[:-1], list(tp)[1:])},
         "tail_percentile": tail_pct,
@@ -349,7 +382,7 @@ def end_to_end(args, workload, seed: int) -> tuple[dict, dict]:
         "loop_s": wall,
         "failed_frac": failed / len(samples),
         "sample_walls": [(s["query"], s["first"], round(s["wall"], 4), round(sum(s["cpu"].values()), 3)) for s in samples],
-        "problems": {k: v for k, v in problems.items() if v},
+        "problems": problem_record(samples, problems),
         "manifest": manifest,
         "conf": conf,
     }
@@ -362,7 +395,7 @@ def untraced_loop(args, workload, seed: int) -> tuple[dict, dict]:
     in_dir, _ = inputs_for(workload, seed)
     spark, reg, _ = start_session()
     tree = procstat.ProcessTree()
-    samples, _, _, n_rounds, wall = run_loop(spark, reg, workload, seed, args.seconds, in_dir, tree)
+    samples, _, n_rounds, wall = run_loop(spark, reg, workload, seed, args.seconds, in_dir, tree)
     stop_session(spark)
     return {"round_s": metric(wall / n_rounds, "s")}, {"failed": 0, "attempted": len(samples)}
 
@@ -380,10 +413,10 @@ def traced(args, workload, seed: int) -> tuple[dict, dict]:
     tracer.install()
     tree = procstat.ProcessTree()
     tree.start_sampling()
-    samples, kept, errors, n_rounds, wall = run_loop(spark, reg, workload, seed, args.seconds, in_dir, tree, tracer)
+    samples, frames, n_rounds, wall = run_loop(spark, reg, workload, seed, args.seconds, in_dir, tree, tracer)
     peak = tree.stop_sampling()
     tracer.uninstall()
-    problems = check_results(spark, reg, kept, errors, in_dir)
+    problems = check_results(spark, reg, samples, frames, in_dir)
     conf = conf_snapshot(spark)
     stop_session(spark)
     failed = failures(samples, problems)
@@ -401,18 +434,57 @@ def traced(args, workload, seed: int) -> tuple[dict, dict]:
         "samples": len(samples),
         "untraced_rounds_s": base["metrics"]["round_s"]["value"],
         "loop_s": wall,
-        "split_per_round_s": {
-            "build": metrics["queries.build_s"]["value"],
-            "catalyst": sum(metrics[f"catalyst.{p}_s"]["value"] for p in ("analysis", "optimization", "planning")),
-            "action": sum(sp.t1 - sp.t0 for sp in tracer.spans if sp.name == "action") / n_rounds,
-            "exec_task": metrics["exec.task_s"]["value"],
-            "stream_run_to_memory": metrics["stream.run_to_memory_s"]["value"],
-        },
-        "problems": {k: v for k, v in problems.items() if v},
+        "split_per_round_s": split(samples, n_rounds, wall, tracer, execs, conf["cores"]),
+        "split_per_query_s": split_by_query(samples, n_rounds, tracer, execs),
+        "problems": problem_record(samples, problems),
         "manifest": manifest,
         "conf": conf,
     }
     return metrics, record | {"failed": failed, "attempted": len(samples)}
+
+
+def _span_s_by_run(tracer, name: str) -> dict[int, float]:
+    out: dict[int, float] = {}
+    for sp in tracer.spans:
+        if sp.name == name and sp.qid is not None:
+            out[sp.qid] = out.get(sp.qid, 0.0) + sp.t1 - sp.t0
+    return out
+
+
+def split(samples, n_rounds: int, wall: float, tracer, execs: dict, cores: int) -> dict:
+    """Where a round's time goes: loop wall, fn() build, Catalyst
+    phases, the noop action, executor task time (summed over tasks, and
+    divided by the cores: the wall executors were busy if perfectly
+    packed) and the streaming layer's run_to_memory."""
+    per_round = 1.0 / n_rounds
+    task_s = sum(e["task_s"] for e in execs.values()) * per_round
+    return {
+        "loop": wall * per_round,
+        "build": sum(_span_s_by_run(tracer, "queries.build").values()) * per_round,
+        "catalyst": sum(sum(s.get("catalyst", {}).values()) for s in samples) * per_round,
+        "action": sum(_span_s_by_run(tracer, "action").values()) * per_round,
+        "exec_task": task_s,
+        "exec_task_per_core": task_s / cores,
+        "stream_run_to_memory": sum(_span_s_by_run(tracer, "stream.run_to_memory").values()) * per_round,
+    }
+
+
+def split_by_query(samples, n_rounds: int, tracer, execs: dict) -> dict:
+    """Per query, per round: wall, fn() build, action and executor task
+    seconds."""
+    build, action = _span_s_by_run(tracer, "queries.build"), _span_s_by_run(tracer, "action")
+    out: dict[str, dict[str, float]] = {}
+    for s in samples:
+        q = out.setdefault(s["query"], dict.fromkeys(("wall", "build", "action", "exec_task"), 0.0))
+        rid = s["rid"]
+        for key, v in (
+            ("wall", s["wall"]),
+            ("build", build.get(rid, 0.0)),
+            ("action", action.get(rid, 0.0)),
+            ("exec_task", execs.get(rid, {}).get("task_s", 0.0)),
+        ):
+            q[key] += v / n_rounds
+    return out
 
 
 def layer_metrics(samples, n_rounds: int, wall: float, tracer, execs: dict, untraced_round_s: float) -> dict:
@@ -451,12 +523,6 @@ def layer_metrics(samples, n_rounds: int, wall: float, tracer, execs: dict, untr
     for role in procstat.ROLES:
         m[f"proc.{role}_cpu_s"] = metric(sum(s["cpu"][role] for s in samples) * per_round, "s")
     m["trace.overhead_s"] = metric(wall * per_round - untraced_round_s, "s")
-    task_by_query: dict[str, float] = {}
-    for s in samples:
-        e = execs.get(s["rid"])
-        task_by_query[s["query"]] = task_by_query.get(s["query"], 0.0) + (e["task_s"] if e else 0.0)
-    for q in workloads.ALL_QUERIES:
-        m[f"exec.task_s.{q}"] = metric(task_by_query.get(q, 0.0) * per_round, "s")
     return m
 
 
@@ -502,7 +568,7 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload")
     ap.add_argument("--seed", type=int, default=0)
-    ap.add_argument("--seconds", type=float, default=21.0)
+    ap.add_argument("--seconds", type=float, default=20.0)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--setup-probe", action="store_true", help=argparse.SUPPRESS)
     ap.add_argument("--untraced", action="store_true", help=argparse.SUPPRESS)

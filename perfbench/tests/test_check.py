@@ -1,4 +1,4 @@
-"""The oracle check flags a wrong or failed result."""
+"""The oracle check flags a wrong or failed result in any run of a query."""
 
 import pytest
 
@@ -49,23 +49,40 @@ def expected(inputs, reg):
         con.close()
 
 
+def _runs(*frames):
+    """Samples and frames of successive runs of QUERY: a frame of None
+    is a run that raised."""
+    samples, kept = [], {}
+    for rid, frame in enumerate(frames):
+        if frame is None:
+            samples.append({"rid": rid, "query": QUERY, "ok": False, "error": "Traceback...\nValueError: boom"})
+        else:
+            samples.append({"rid": rid, "query": QUERY, "ok": True})
+            kept[rid] = frame
+    return samples, kept
+
+
 def test_matching_result_passes(inputs, reg, expected):
-    problems = run.check_results(_Spark(), reg, {QUERY: _Frame(expected.copy())}, {}, inputs)
-    assert problems == {QUERY: []}
+    samples, kept = _runs(_Frame(expected.copy()), _Frame(expected.copy()))
+    problems = run.check_results(_Spark(), reg, samples, kept, inputs)
+    assert problems == {0: [], 1: []}
+    assert run.failures(samples, problems) == 0
 
 
 def test_perturbed_result_is_flagged(inputs, reg, expected):
     wrong = expected.copy()
     col = next(c for c in wrong.columns if wrong[c].dtype.kind in "if")
     wrong.loc[wrong.index[0], col] = wrong[col].iloc[0] + 1
-    problems = run.check_results(_Spark(), reg, {QUERY: _Frame(wrong)}, {}, inputs)
-    assert problems[QUERY], "a changed value must be reported"
-    dropped = run.check_results(_Spark(), reg, {QUERY: _Frame(expected.iloc[1:])}, {}, inputs)
-    assert dropped[QUERY], "a missing row must be reported"
+    samples, kept = _runs(_Frame(expected.copy()), _Frame(wrong), _Frame(expected.iloc[1:]))
+    problems = run.check_results(_Spark(), reg, samples, kept, inputs)
+    assert not problems[0]
+    assert problems[1], "a changed value in a later (warm) run must be reported"
+    assert problems[2], "a missing row must be reported"
+    assert run.failures(samples, problems) == 2
 
 
 def test_raised_query_counts_as_failed(inputs, reg, expected):
-    problems = run.check_results(_Spark(), reg, {}, {QUERY: "Traceback...\nValueError: boom"}, inputs)
-    assert problems[QUERY] == ["raised: ValueError: boom"]
-    samples = [{"query": QUERY, "ok": False}, {"query": QUERY, "ok": True}, {"query": "other", "ok": True}]
-    assert run.failures(samples, problems) == 2
+    samples, kept = _runs(None, _Frame(expected.copy()))
+    problems = run.check_results(_Spark(), reg, samples, kept, inputs)
+    assert problems == {0: ["raised: ValueError: boom"], 1: []}
+    assert run.failures(samples, problems) == 1

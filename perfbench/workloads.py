@@ -8,26 +8,30 @@ process, so each query's cold time does not depend on which query
 happened to pay the JVM's warm-up; every later round runs it in an
 order shuffled by the run's seed, which decides the cache state each
 query meets.  The number of rounds is ``--seconds`` over the
-workload's ``round_s``, the length of an average round on the
-reference host (4 cores), so a run does the same work on every host
-and commit and lasts about ``--seconds`` here.
+workload's ``round_s``, roughly the length of an average round on
+the reference host (4 cores), rounded; so a run does the same work on
+every host and commit and its loop lasts about ``--seconds`` here.
 
-Two workloads, chosen to stress opposite layers:
+Two workloads.  What each one stresses is measured, not assumed: the
+traced run's ``split_per_round_s`` (see README.md for the figures at
+the shipped sizes).
 
 * ``kascade_batch`` - the paper's chain (ETL with rotation
   augmentation, stratified split, CNN inference, the analysis pipeline
-  ending in the survival curve, banded AUC) over seeded events in 8
-  files.  Its time is in the action: scans, shuffles, windows and
-  Python workers.
-* ``corpus_interactive`` - small tables and queries whose time is in
-  the driver: a 6-table join through the catalog, MinHash dedup with
-  its cross-query cache, an iterative PageRank built in ``fn()``, a
-  window top-k, and the survival curve replayed as a stream over the
-  events table, whose micro-batch planning, state-store and WAL
-  commits also run inside ``fn()``.
-  It is the control for ``kascade_batch``: a change to executor work
-  should move the first and not this one, a change to planning or
-  caches the reverse.
+  ending in the survival curve, banded AUC) over 150 000 seeded events
+  in 8 files, three rounds.  About three quarters of its loop is the
+  noop action, and it carries about twice the executor task time of
+  ``corpus_interactive`` per round, with all of the Python-worker time.
+* ``corpus_interactive`` - small tables: a 6-table join through the
+  catalog, MinHash dedup with its cross-query cache, an iterative
+  PageRank built in ``fn()``, a window top-k, and the survival curve
+  replayed as a stream, whose micro-batches run inside ``fn()``; three
+  rounds.  About three fifths of its loop is ``fn()``.  It still runs
+  executor tasks (MinHash's first run, the stream's micro-batches, the
+  join), so it is the control for driver-side work - plan building,
+  the catalog, caches, the streaming floor - not an executor-free
+  workload: a change to executor work moves both, ``kascade_batch``
+  about twice as much.
 """
 
 from __future__ import annotations
@@ -74,7 +78,7 @@ WORKLOADS = {
                 "grouped_auc_by_band",
             ),
             7.0,
-            InputSpec(sf=0.01, events=50_000, events_files=8, documents=1000, embeddings=1000),
+            InputSpec(sf=0.01, events=150_000, events_files=8, documents=1000, embeddings=1000),
         ),
         Workload(
             "corpus_interactive",
@@ -86,12 +90,10 @@ WORKLOADS = {
                 "stream_survival_curve",
             ),
             7.0,
-            InputSpec(sf=0.01, events=20_000, events_files=4, documents=1000, embeddings=1000),
+            InputSpec(sf=0.01, events=20_000, events_files=4, documents=300, embeddings=1000),
         ),
     )
 }
-
-ALL_QUERIES = tuple(dict.fromkeys(q for w in WORKLOADS.values() for q in w.mix))
 
 
 def n_rounds(workload: Workload, seconds: float) -> int:
