@@ -15,7 +15,10 @@ Where the reference materializes eagerly after every step, each
 pipeline here is ONE logical plan: Catalyst fuses the projections,
 pushes the band filter below everything filter-commutable, and the
 only event-scale shuffles are the split window and the final
-histogram aggregate.
+histogram aggregate. A filter on a window output cannot move below
+the window, so the rotations are one ``explode`` above the single split
+``Window``, not a union of filtered branches that each re-read,
+re-sort and re-rank the input.
 """
 
 from __future__ import annotations
@@ -34,43 +37,37 @@ def stratified_split_assign(
     fractions: tuple[float, float] = (0.6, 0.8),
 ) -> DataFrame:
     """Exact stratified split assignment (X1): percent_rank over a
-    seeded draw within each class, bucketed at the cumulative
-    fractions."""
+    seeded draw within each class, projected once (so the ``Window``
+    computes it once) and bucketed at the cumulative fractions."""
     if rnd is None:
         rnd = F.rand(42)
     w = Window.partitionBy(label_col).orderBy(rnd.asc(), F.col("event_id").asc())
-    pr = F.percent_rank().over(w)
-    return df.withColumn(
+    pr = F.col("_pr")
+    return df.withColumn("_pr", F.percent_rank().over(w)).withColumn(
         "split",
         F.when(pr < fractions[0], F.lit("train"))
         .when(pr < fractions[1], F.lit("valid"))
         .otherwise(F.lit("test")),
-    )
+    ).drop("_pr")
 
 
 def augment_rotations(
-    train: DataFrame, fraction: float, draw: F.Column, k_values: tuple[int, ...] = (1, 2, 3)
+    df: DataFrame, fraction: float, draw: F.Column, k_values: tuple[int, ...] = (1, 2, 3), *,
+    eligible: F.Column,
 ) -> DataFrame:
-    """Sample-then-rotate augmentation (X2 + T2 + T4): per rotation k,
-    keep ~fraction of train rows by the deterministic ``draw(k)`` and
-    rotate azimuth/core in closed form. Returns train ∪ rotated
-    copies with a ``k`` provenance column."""
-    parts = [train.withColumn("k", F.lit(0))]
-    for k in k_values:
-        az = physics.rotate_azimuth(F.col("az"), k)
-        cx, cy = physics.rotate_core(F.col("core_x"), F.col("core_y"), k)
-        rotated = (
-            train.filter((draw + F.lit(k) * 0.1) % 1 < fraction)
-            .withColumn("az", az)
-            .withColumn("core_x", cx)
-            .withColumn("core_y", cy)
-            .withColumn("k", F.lit(k))
-        )
-        parts.append(rotated)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    """Sample-then-rotate augmentation (X2 + T2 + T4) as one ``Generate``:
+    each row keeps k=0, and an ``eligible`` row also yields rotation k
+    when the deterministic ``(draw + 0.1·k) % 1 < fraction``, rotated in
+    closed form under a ``CASE`` on the ``k`` column it adds."""
+    k = F.col("k")
+    kept = [F.when(eligible & ((draw + F.lit(j) * 0.1) % 1 < fraction), F.lit(j)) for j in k_values]
+    out = df.withColumn("k", F.explode(F.array(F.lit(0), *kept))).filter(k.isNotNull())
+    az, cx, cy = F.col("az"), F.col("core_x"), F.col("core_y")
+    cases = dict.fromkeys(("az", "core_x", "core_y"), F)  # F.when opens a CASE, Column.when extends it
+    for j in k_values:
+        rotated = (physics.rotate_azimuth(az, j), *physics.rotate_core(cx, cy, j))
+        cases = {c: cases[c].when(k == j, r) for c, r in zip(cases, rotated)}
+    return out.withColumns({c: case.otherwise(F.col(c)) for c, case in cases.items()})
 
 
 def add_direction_features(df: DataFrame) -> DataFrame:
@@ -85,18 +82,18 @@ def prepare_datasets(
     aug_draw: F.Column,
     augment_fraction: float = 0.3,
 ) -> DataFrame:
-    """Entry point 3.1 as one DAG. ``rnd`` drives the split and
-    ``aug_draw`` the augmentation sampling — they MUST be independent
-    draws: the split conditions train membership on rnd (train = the
-    lowest fractions), so reusing it for sampling would skew every
-    rotation's effective rate (the reference seeds independent draws,
-    ``create_train_valid_test_datasets.py:78-80``). Tests use two
-    different integer hashes so the DuckDB oracle replays both."""
+    """Entry point 3.1 as one DAG: one split ``Window``, then one
+    rotation ``Generate`` that augments train rows only. ``rnd`` drives
+    the split and ``aug_draw`` the augmentation sampling — they MUST be
+    independent draws: the split conditions train membership on rnd
+    (train = the lowest fractions), so reusing it for sampling would
+    skew every rotation's effective rate (the reference seeds
+    independent draws, ``create_train_valid_test_datasets.py:78-80``).
+    Tests use two different integer hashes so the DuckDB oracle replays
+    both."""
     split = stratified_split_assign(shower, rnd=rnd)
-    train = split.filter(F.col("split") == "train")
-    rest = split.filter(F.col("split") != "train").withColumn("k", F.lit(0))
-    augmented = augment_rotations(train, augment_fraction, draw=aug_draw)
-    return add_direction_features(augmented.unionByName(rest))
+    train = F.col("split") == "train"
+    return add_direction_features(augment_rotations(split, augment_fraction, aug_draw, eligible=train))
 
 
 def analysis_pipeline(

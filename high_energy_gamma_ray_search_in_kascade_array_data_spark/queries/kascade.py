@@ -347,23 +347,21 @@ def q_augment_rotations(spark: SparkSession, sf_dir: str) -> DataFrame:
     `create_train_valid_test_datasets.py:72-80` — an anti-optimization
     Catalyst's filter-through-projection pushdown removes). Uses a
     deterministic multiplicative-hash draw so the oracle reproduces the
-    sample exactly."""
+    sample exactly. The kept copies of a row come from one ``explode``
+    over one grid scan, and ix/iy are rotated under a ``CASE`` on k."""
     grid = detector_grid(spark, sf_dir)
-    parts = [
-        grid.select(F.lit(0).cast("int").alias("k"), "event_id", "ix", "iy", "edep")
-    ]
-    for k in (1, 2, 3):
-        draw = (F.col("event_id") % 2147483648) * (2654435761 + k) % 4294967296 / F.lit(4294967296.0)
-        sampled = grid.filter(draw < 0.3)
-        rx, ry = physics.rotate_grid_index(F.col("ix"), F.col("iy"), k)
-        parts.append(
-            sampled.select(
-                F.lit(k).cast("int").alias("k"), "event_id", rx.alias("ix"), ry.alias("iy"), "edep"
-            )
-        )
-    aug = parts[0]
-    for p in parts[1:]:
-        aug = aug.unionByName(p)
+    k, ix, iy = F.col("k"), F.col("ix"), F.col("iy")
+    kept = [F.lit(0)]
+    rx, ry = F, F  # F.when opens a CASE, Column.when extends it
+    for j in (1, 2, 3):
+        draw = (F.col("event_id") % 2147483648) * (2654435761 + j) % 4294967296 / F.lit(4294967296.0)
+        kept.append(F.when(draw < 0.3, F.lit(j)))
+        jx, jy = physics.rotate_grid_index(ix, iy, j)
+        rx, ry = rx.when(k == j, jx), ry.when(k == j, jy)
+    aug = grid.select("event_id", F.explode(F.array(*kept)).alias("k"), "ix", "iy", "edep")
+    aug = aug.filter(k.isNotNull()).select(
+        k, "event_id", rx.otherwise(ix).alias("ix"), ry.otherwise(iy).alias("iy"), "edep"
+    )
     return aug.groupBy("k").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.round(F.sum(F.col("edep") * (F.col("iy") * 16 + F.col("ix"))), 4).alias("checksum"),
@@ -492,10 +490,11 @@ def q_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the class key; at scale the window runs per-class-partition."""
     df = shower_frame(spark, sf_dir)
     w = Window.partitionBy("label").orderBy(rnd_col().asc(), F.col("event_id").asc())
-    assigned = df.select(
+    pr = F.col("pr")
+    assigned = df.select("label", F.percent_rank().over(w).alias("pr")).select(
         "label",
-        F.when(F.percent_rank().over(w) < 0.6, F.lit("train"))
-        .when(F.percent_rank().over(w) < 0.8, F.lit("valid"))
+        F.when(pr < 0.6, F.lit("train"))
+        .when(pr < 0.8, F.lit("valid"))
         .otherwise(F.lit("test"))
         .alias("split"),
     )

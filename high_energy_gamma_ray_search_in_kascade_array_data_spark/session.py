@@ -31,13 +31,17 @@ def get_spark(
     # the worker_site dir (and its sitecustomize) does not leak into
     # non-Spark subprocesses spawned later from this driver (ADVICE
     # r5); the JVM captured the env at launch, which is all workers see.
+    # The package's parent directory rides along the same way, so the
+    # workers can unpickle the package's functions (pandas_udf bodies)
+    # even when the driver was started from a cwd outside the checkout.
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.compat import pbshim
 
-    ws = pbshim.worker_site_dir()
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     prior_pp = os.environ.get("PYTHONPATH")
-    pp = prior_pp or ""
-    if ws not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = ws + (os.pathsep + pp if pp else "")
+    pp = prior_pp.split(os.pathsep) if prior_pp else []
+    missing = [d for d in (pbshim.worker_site_dir(), pkg_parent) if d not in pp]
+    if missing:
+        os.environ["PYTHONPATH"] = os.pathsep.join(missing + pp)
     if shuffle_partitions is None:
         n = os.cpu_count() or 8
         shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", str(min(n, 32))))

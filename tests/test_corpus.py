@@ -40,6 +40,67 @@ def test_query_matches_oracle(name, spark, sf_dir, con):
     assert len(spark_pdf) > 0, f"{name}: empty result — weak test, widen the filter"
 
 
+def test_prepare_datasets_rows_match_oracle(spark, sf_dir, con):
+    """Row-level differential for entry point 3.1: every output row of
+    ``etl.prepare_datasets`` against DuckDB, not just the per-(split, k)
+    sums the registered query checks — a rotation swapped between two
+    rows keeps those sums but fails here. Direction cosines are libm
+    transcendentals, so both sides round them (registry rules); the
+    other columns must match exactly, signed zeros included."""
+    from pyspark.sql import functions as F
+
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators import etl
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.common import (
+        RND2_SQL,
+        RND_SQL,
+        SHOWER_CTE,
+        rnd2_col,
+        rnd_col,
+        shower_frame,
+    )
+
+    exact = ["event_id", "split", "k", "az", "core_x", "core_y"]
+    dirs = ["dir_x", "dir_y", "dir_z"]
+    out = etl.prepare_datasets(
+        shower_frame(spark, sf_dir), rnd=rnd_col(), aug_draw=rnd2_col(), augment_fraction=0.3
+    )
+    spark_pdf = out.select(*exact, *[F.round(d, 12).alias(d) for d in dirs]).toPandas()
+    oracle_pdf = con.execute(
+        f"""
+WITH {SHOWER_CTE},
+ranked AS (
+  SELECT s.*, {RND2_SQL} AS rnd,
+         percent_rank() OVER (PARTITION BY label ORDER BY {RND_SQL}, event_id) AS pr
+  FROM shower s
+),
+assigned AS (
+  SELECT *, CASE WHEN pr < 0.6 THEN 'train' WHEN pr < 0.8 THEN 'valid' ELSE 'test' END AS split
+  FROM ranked
+),
+train AS (SELECT * FROM assigned WHERE split = 'train'),
+aug AS (
+  SELECT event_id, split, 0 AS k, az, core_x, core_y, ze FROM assigned
+  UNION ALL
+  SELECT event_id, split, 1, (az + 90) % 360, -core_x, core_y, ze FROM train WHERE (rnd + 0.1) % 1 < 0.3
+  UNION ALL
+  SELECT event_id, split, 2, (az + 180) % 360, -core_x, -core_y, ze FROM train WHERE (rnd + 0.2) % 1 < 0.3
+  UNION ALL
+  SELECT event_id, split, 3, (az + 270) % 360, core_x, -core_y, ze FROM train WHERE (rnd + 0.3) % 1 < 0.3
+)
+SELECT event_id, split, k, az, core_x, core_y,
+       ROUND(SIN(RADIANS(ze)) * COS(RADIANS(az)), 12) AS dir_x,
+       ROUND(SIN(RADIANS(ze)) * SIN(RADIANS(az)), 12) AS dir_y,
+       ROUND(COS(RADIANS(ze)), 12) AS dir_z
+FROM aug
+"""
+    ).fetchdf()
+    assert set(spark_pdf["k"]) == {0, 1, 2, 3}
+    problems = compare_frames(spark_pdf, oracle_pdf)
+    assert not problems, problems
+    hash_problems = exact_hash_problems(spark_pdf[exact], oracle_pdf[exact])
+    assert not hash_problems, hash_problems
+
+
 # ---------------------------------------------------------------------------
 # Hand-verified semantics for the exact substring-dedup family: the
 # oracle gate proves Spark == DuckDB; this fixture proves both equal

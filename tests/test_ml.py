@@ -256,3 +256,37 @@ def test_cnn_artifact_executor_roundtrip(spark, sf_dir):
     muons = np.stack([((e * (m + 13)) % 89) / 16.0 for e in eids]).reshape(-1, 16, 16)
     logit = cnn.cnn_forward(state, feats, np.stack([edep, muons], axis=1))
     assert pdf["logit"].to_numpy().tolist() == logit.tolist()
+
+
+def test_cnn_artifact_inference_from_outside_the_checkout(sf_dir, tmp_path):
+    """A driver started from a cwd outside the checkout, with no
+    PYTHONPATH, still runs the pandas_udf query: ``get_spark`` puts the
+    package's parent directory on the Python workers' path, so they can
+    unpickle the package's scorer. Without it the workers fail with
+    ``ModuleNotFoundError``."""
+    import subprocess
+    import sys
+    import textwrap
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = "high_energy_gamma_ray_search_in_kascade_array_data_spark"
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {root!r})
+        from {pkg} import get_spark
+        from {pkg}.registry import corpus
+        spark = get_spark("outside_checkout", shuffle_partitions=2)
+        rows = corpus()["cnn_artifact_inference"].fn(spark, {sf_dir!r}).collect()
+        print("rows", len(rows))
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")
+    r = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert r.returncode == 0, f"stdout:\n{r.stdout}\nstderr:\n{r.stderr[-3000:]}"
+    assert int(r.stdout.split("rows", 1)[1]) > 0

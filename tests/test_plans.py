@@ -687,3 +687,39 @@ def test_aqe_skew_join_splits_at_runtime(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "skew=true" in plan, plan[:2000]
     assert "AQEShuffleRead skewed" in plan
+
+
+def _plan_nodes(df) -> list[str]:
+    """Operator names in the tree of the formatted physical plan."""
+    import re
+
+    tree = physical_plan(df).split("\n\n", 1)[0].splitlines()[1:]
+    return [re.sub(r"^[\s:+-]*|\s*\(\d+\)$", "", line) for line in tree]
+
+
+def test_prepare_datasets_runs_the_split_window_once(spark, sf_dir):
+    """Entry point 3.1 reads events once, ranks them in one ``Window``
+    and expands the rotations with one ``Generate``. A union of
+    per-rotation branches filters on the window's ``split`` output,
+    which cannot move below the window, so each branch would re-read,
+    re-sort and re-rank the input."""
+    nodes = _plan_nodes(_q("etl_prepare_datasets", spark, sf_dir))
+    assert nodes.count("Scan parquet") == 1, nodes
+    assert nodes.count("Window") == 1, nodes
+    assert nodes.count("Generate") == 1, nodes
+    assert "Union" not in nodes, nodes
+
+
+def test_augment_rotations_scans_the_grid_once(spark, sf_dir):
+    nodes = _plan_nodes(_q("augment_rotations", spark, sf_dir))
+    assert nodes.count("Scan parquet") == 1, nodes
+    assert "Union" not in nodes, nodes
+
+
+@pytest.mark.parametrize("name", ["stratified_split", "etl_prepare_datasets"])
+def test_split_window_computes_one_percent_rank(name, spark, sf_dir):
+    """The rank is projected once and bucketed after, so the ``Window``
+    evaluates one ``percent_rank``, not one per ``when`` branch."""
+    plan = physical_plan(_q(name, spark, sf_dir))
+    window_args = [line for line in plan.splitlines() if "windowspecdefinition" in line]
+    assert sum(line.count("percent_rank(") for line in window_args) == 1, window_args
