@@ -147,22 +147,22 @@ def cnn_forward(state: dict, feats: np.ndarray, grids: np.ndarray) -> np.ndarray
 
 def make_cnn_scorer_udf(artifact_path: str):
     """Arrow ``pandas_udf`` running the full CNN_B forward from the
-    persisted artifact, loaded once per executor worker (stat-keyed
-    cache, ``inference.load_artifact_cached``).  Takes the scalar
+    persisted artifact, loaded on the executor per Arrow batch
+    (``inference.load_model_artifact``).  Takes the scalar
     feature array and the two grid-channel arrays; returns a struct of
     (logit, sigmoid) — logit is exact and hash-checked raw, sigmoid is
     rounded by the caller (libm exp may differ in the last ulp)."""
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.ml.inference import load_artifact_cached
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.ml.inference import load_model_artifact
 
     # explicit SCALAR eval type: the type-hint inference path does not
     # accept multi-Series -> DataFrame (struct-returning) signatures
     def score(feats, edep, muons):
         if len(feats) == 0:
             return pd.DataFrame({"logit": [], "sigmoid": []})
-        state = load_artifact_cached(artifact_path)
+        state = load_model_artifact(artifact_path)
         fmat = np.stack(feats.to_numpy())  # (B, 11)
         g = np.stack(
             [

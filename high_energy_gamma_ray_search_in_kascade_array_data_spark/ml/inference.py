@@ -83,17 +83,39 @@ def load_model_artifact(path: str) -> dict:
         return {k: np.asarray(z[k], dtype="float64") for k in z.files}
 
 
+def _mlp_forward(state: dict, mat):
+    """σ(W3·relu(W2·relu(W1·x + b1) + b2) + b3) over ``mat`` (batch,
+    n_in) float64, each unit summed ``b + w0*x0 + w1*x1 + ...``
+    left-to-right, so the pre-sigmoid values are bit-identical to
+    ``mlp_score_sql``'s."""
+    import numpy as np
+
+    x = mat
+    n_layers = len({k.split(".")[0] for k in state})
+    for li in range(1, n_layers + 1):
+        w, b = state[f"fc{li}.weight"], state[f"fc{li}.bias"]
+        z = np.empty((x.shape[0], w.shape[0]), dtype="float64")
+        for u in range(w.shape[0]):  # explicit left-to-right sum
+            acc = np.full(x.shape[0], b[u])
+            for j in range(w.shape[1]):
+                acc = acc + w[u, j] * x[:, j]
+            z[:, u] = acc
+        x = z if li == n_layers else np.maximum(z, 0.0)
+    return 1.0 / (1.0 + np.exp(-x[:, 0]))
+
+
 def make_mlp_scorer_udf(artifact_path: str):
     """Vectorized MLP forward pass from a PERSISTED model artifact
     (SURVEY M1): σ(W3·relu(W2·relu(W1·x + b1) + b2) + b3) — the fc-head
     shape of the reference CNN_B (``cnn_model.py:26-28,44-47``: fc1 →
     relu → fc2 → relu → fc3, "the loss functions include the sigmoid").
 
-    The artifact is loaded lazily ON THE EXECUTOR, once per worker
-    process (module-level cache), exactly how a torch ``state_dict``
-    checkpoint would ship to a 1000-executor cluster: the closure
-    captures only the path string; each worker deserializes locally
-    (pair with ``SparkContext.addFile``/shared storage at scale).
+    The artifact is loaded lazily ON THE EXECUTOR, exactly how a torch
+    ``state_dict`` checkpoint would ship to a 1000-executor cluster:
+    the closure captures only the path string; each worker
+    deserializes locally (pair with ``SparkContext.addFile``/shared
+    storage at scale). The scalar form loads once per Arrow batch —
+    about 1 ms for a small ``.npz`` — and always sees the current file.
 
     Accumulation order note: each unit computes
     ``b + w0*x0 + w1*x1 + ...`` left-to-right, bit-identical to the
@@ -103,51 +125,13 @@ def make_mlp_scorer_udf(artifact_path: str):
     """
     import numpy as np
 
-    def _forward(state: dict, mat):  # mat: (batch, n_in) float64
-        x = mat
-        n_layers = len({k.split(".")[0] for k in state})
-        for li in range(1, n_layers + 1):
-            w, b = state[f"fc{li}.weight"], state[f"fc{li}.bias"]
-            z = np.empty((x.shape[0], w.shape[0]), dtype="float64")
-            for u in range(w.shape[0]):  # explicit left-to-right sum
-                acc = np.full(x.shape[0], b[u])
-                for j in range(w.shape[1]):
-                    acc = acc + w[u, j] * x[:, j]
-                z[:, u] = acc
-            x = z if li == n_layers else np.maximum(z, 0.0)
-        return 1.0 / (1.0 + np.exp(-x[:, 0]))
-
     @F.pandas_udf(DoubleType())
     def score(features: pd.Series) -> pd.Series:
-        state = load_artifact_cached(artifact_path)
+        state = load_model_artifact(artifact_path)
         mat = np.stack(features.to_numpy())
-        return pd.Series(_forward(state, mat))
+        return pd.Series(_mlp_forward(state, mat))
 
     return score
-
-
-# executor-side once-per-worker artifact cache, keyed by
-# (path, mtime_ns, size) so artifact rewrites invalidate
-_artifact_cache: dict = {}
-
-
-def load_artifact_cached(path: str) -> dict:
-    """Executor-side once-per-worker artifact load. The cache key
-    includes (mtime_ns, size): a rewritten checkpoint at the same path
-    must not keep scoring with stale cached weights on long-lived
-    executors."""
-    import os
-
-    st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    state = _artifact_cache.get(key)
-    if state is None:
-        # evict only stale versions of THIS path: a worker alternating
-        # between models must not thrash the other artifacts' entries
-        for k in [k for k in _artifact_cache if k[0] == path]:
-            del _artifact_cache[k]
-        state = _artifact_cache[key] = load_model_artifact(path)
-    return state
 
 
 def mlp_score_sql(state: dict, feature_exprs: Sequence[str]) -> str:
@@ -193,33 +177,18 @@ def make_mlp_scorer_iter_udf(artifact_path: str):
     amortize across every Arrow batch the task processes.  For a real
     torch checkpoint the artifact load (+ GPU transfer) dominates a
     batch, so this is the inference form a 1000-executor scorer
-    actually uses; the scalar form re-enters the cache per batch,
-    which is correct but pays the lookup every time.
+    actually uses; the scalar form reloads per batch.
 
-    Numerics are identical to the scalar form (same ``_forward``,
+    Numerics are identical to the scalar form (same ``_mlp_forward``,
     same left-to-right accumulation), so both variants hash against
     the SAME unrolled-SQL oracle."""
     import numpy as np
 
-    def _forward(state: dict, mat):
-        x = mat
-        n_layers = len({k.split(".")[0] for k in state})
-        for li in range(1, n_layers + 1):
-            w, b = state[f"fc{li}.weight"], state[f"fc{li}.bias"]
-            z = np.empty((x.shape[0], w.shape[0]), dtype="float64")
-            for u in range(w.shape[0]):
-                acc = np.full(x.shape[0], b[u])
-                for j in range(w.shape[1]):
-                    acc = acc + w[u, j] * x[:, j]
-                z[:, u] = acc
-            x = z if li == n_layers else np.maximum(z, 0.0)
-        return 1.0 / (1.0 + np.exp(-x[:, 0]))
-
     @F.pandas_udf(DoubleType())
     def score(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        state = load_artifact_cached(artifact_path)  # once per task
+        state = load_model_artifact(artifact_path)  # once per task
         for features in batches:
             mat = np.stack(features.to_numpy())
-            yield pd.Series(_forward(state, mat))
+            yield pd.Series(_mlp_forward(state, mat))
 
     return score

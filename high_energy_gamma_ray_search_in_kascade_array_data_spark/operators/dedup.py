@@ -23,6 +23,9 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import re
+import threading
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -97,48 +100,27 @@ def token_vocab(toks: DataFrame) -> DataFrame:
     )
 
 
-# Persisted frames from recent pipeline invocations. The cache
-# lifecycle is INVOCATION-KEYED (r7 VERDICT task 8): real curation
-# pipelines run near-dup → components → keep-best → histogram
-# back-to-back over the SAME corpus, and the r6 leak fix (release on
-# every entry) made each of those re-shingle from scratch (×1.4–1.9
-# family-wide bench regression). Now each entry point computes a
-# semantic corpus key (input files + exprId-normalized plan + params);
-# a call with a cached key reuses its memoized frames, and the slot
-# table holds at most _MAX_SLOTS invocations (2: the dict + xxhash64
-# variants of one corpus interleave in real sweeps), evicting the
-# least-recently-used slot's persisted frames — so memory stays
-# bounded, exactly the invariant the r6 fix established, without the
-# repeated-invocation penalty. A non-file-backed frame has no sound
+# Persisted frames from recent pipeline invocations, one SLOT per
+# invocation key: curation pipelines run near-dup → components →
+# keep-best → histogram back-to-back over the SAME corpus, and
+# re-shingling per call cost ×1.4–1.9 family-wide. Each entry point
+# computes a semantic corpus key (input files + their stat keys +
+# exprId-normalized plan + params), and a call with a cached key reuses
+# its slot's memoized frames. The table holds at most _MAX_SLOTS
+# invocations (2: the dict + xxhash64 variants of one corpus interleave
+# in real sweeps), evicting the least-recently-used slot's persisted
+# frames, so memory stays bounded. A non-file-backed frame has no sound
 # key and flushes everything (a false cache hit would be a wrong
-# answer). ``release_caches()`` is the explicit flush. Releasing a
-# cache a caller still holds is safe: the frame silently recomputes,
-# correctness is unaffected.
+# answer). ``release_caches()`` is the explicit flush.
+#
+# The entry points pass their slot down explicitly, so concurrent
+# driver threads on different corpora never read each other's slot.
+# The table itself is shared (two threads on the SAME key reuse one
+# slot); its mutations take _SLOTS_LOCK. Releasing a slot a caller
+# still holds is safe: the frame silently recomputes.
 _MAX_SLOTS = 2
-_SLOTS: dict = {}  # key -> {"frames": [persisted DataFrames], "memo": {...}}
-
-# The CURRENT invocation key is THREAD-LOCAL (r10 hardening, found by
-# the concurrency probe): concurrent sessions run pipeline entry
-# points from multiple driver threads (FAIR pools), and a global
-# current-key would let thread A's _memo() read the slot thread B
-# just entered — a cross-corpus cache hit, i.e. a wrong answer. The
-# slot TABLE stays shared (two threads on the SAME corpus key reuse
-# one cache — that is the point); its structural mutations take
-# _SLOTS_LOCK. Eviction may drop a slot another thread still reads —
-# safe: persisted frames silently recompute, correctness unaffected.
-import threading as _threading
-
-_SLOTS_LOCK = _threading.RLock()
-_TLS = _threading.local()
-
-
-def _cur_key() -> str | None:
-    return getattr(_TLS, "key", None)
-
-
-def _slot() -> dict:
-    with _SLOTS_LOCK:
-        return _SLOTS.setdefault(_cur_key(), {"frames": [], "memo": {}})
+_SLOTS: dict = {}  # key -> {"key", "frames": [persisted DataFrames], "memo": {...}}
+_SLOTS_LOCK = threading.RLock()
 
 
 def _release_slot(slot: dict) -> None:
@@ -152,76 +134,66 @@ def _release_slot(slot: dict) -> None:
 def release_caches() -> None:
     """Unpersist every frame cached by prior dedup-pipeline invocations
     and drop all invocation memos."""
-    _TLS.key = None
     with _SLOTS_LOCK:
         while _SLOTS:
             _release_slot(_SLOTS.pop(next(iter(_SLOTS))))
 
 
-def _persist_tracked(df: DataFrame) -> DataFrame:
+def _persist_tracked(df: DataFrame, slot: dict | None) -> DataFrame:
+    """Persist ``df`` and track it in ``slot`` — re-entered in the table
+    if a concurrent entry evicted it meanwhile, so the frame is still
+    released later. A keyless invocation (``slot is None``) tracks it
+    under a throwaway slot that a later keyed entry evicts."""
     df.persist()
     with _SLOTS_LOCK:
-        if _cur_key() is not None:
-            _slot()["frames"].append(df)
-        else:
-            # no sound invocation key: track under a throwaway slot so
-            # the next keyed entry still releases it
-            _SLOTS.setdefault(None, {"frames": [], "memo": {}})["frames"].append(df)
+        if slot is None:
+            slot = _SLOTS.setdefault(None, {"key": None, "frames": [], "memo": {}})
+        _SLOTS.setdefault(slot["key"], slot)["frames"].append(df)
     return df
 
 
-def _corpus_key(docs: DataFrame, *parts) -> str | None:
-    """Semantic fingerprint of (source files + their size/mtime,
-    logical plan, params) — sound to reuse cached frames under when
-    equal. Returns None (never memoize) for frames not backed by
-    files: two distinct in-memory corpora can share schema + empty
-    file list, and a false cache hit would be a wrong answer, so only
-    file-backed reads qualify. Each file's stat (size, mtime_ns) is
-    folded in so an overwrite that reproduces the same file names
-    (CSV/JSON sources, rewritten fixtures) changes the key instead of
-    serving stale frames; a non-local scheme or un-stattable path also
-    returns None — same never-memoize safety default. exprIds (#123)
-    differ across otherwise-identical reads and are stripped."""
-    import os as _os
-    import re as _re
-    from urllib.parse import urlparse as _urlparse
+def _corpus_key(docs: DataFrame, *parts) -> tuple | None:
+    """Semantic fingerprint ``(plan, files, params, stamps)`` of a
+    corpus read — sound to reuse cached frames under when equal.
+    Returns None (never memoize) for frames not backed by files: two
+    distinct in-memory corpora can share schema + empty file list, and
+    a false cache hit would be a wrong answer. Each file is stamped
+    with ``catalog.stat_key``, so an overwrite that reproduces the same
+    file names (CSV/JSON sources, rewritten fixtures) changes the key
+    instead of serving stale frames; a non-local scheme or
+    un-stattable path also returns None. exprIds (#123) differ across
+    otherwise-identical reads and are stripped."""
+    from urllib.parse import urlparse
+
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import stat_key
 
     try:
-        files = sorted(docs.inputFiles())
+        files = tuple(sorted(docs.inputFiles()))
         if not files:
             return None
-        stamped = []
+        stamps = []
         for f in files:
-            parsed = _urlparse(f)
+            parsed = urlparse(f)
             if parsed.scheme not in ("", "file"):
                 return None  # remote store: no cheap local stat — never memoize
-            path = parsed.path or f
-            st = _os.stat(path)
-            stamped.append(f"{f}\x01{st.st_size}\x01{st.st_mtime_ns}")
-        plan = docs._jdf.queryExecution().analyzed().toString()
-        plan = _re.sub(r"#\d+", "", plan)
-        return "\x00".join([plan, *stamped, *map(str, parts)])
+            sk = stat_key(parsed.path or f)
+            if sk is None:
+                return None
+            stamps.append(sk)
+        plan = re.sub(r"#\d+", "", docs._jdf.queryExecution().analyzed().toString())
+        return (plan, files, parts, tuple(stamps))
     except Exception:
         return None
 
 
-def _key_base(key: str) -> str:
-    """The stat-independent part of a corpus key (plan + file names,
-    sizes/mtimes stripped) — two keys with equal base name the same
-    files on disk, so at most one can reflect the current bytes."""
-    import re as _re
+def _memo_enter(key: tuple | None) -> dict | None:
+    """Start an invocation and return its slot. A keyless
+    (non-file-backed) entry flushes everything and returns None; a
+    keyed entry promotes its slot to most-recently-used and evicts
+    beyond _MAX_SLOTS.
 
-    return _re.sub("\x01[^\x00]*", "", key)
-
-
-def _memo_enter(key: str | None) -> bool:
-    """Start an invocation. A keyless (non-file-backed) entry flushes
-    everything; a keyed entry promotes its slot to most-recently-used
-    and evicts beyond _MAX_SLOTS. Returns True when memoized frames
-    may be (re)used.
-
-    A STALE SIBLING — a slot whose key names the same files but with a
-    different size/mtime stamp (the data was rewritten in place) — is
+    A STALE SIBLING — a slot whose key names the same files with a
+    different stat stamp (the data was rewritten in place) — is
     released eagerly, not just left to LRU: its persisted frames live
     in Spark's CacheManager keyed by canonicalized plan, and a fresh
     read of the same path would plan-match and silently substitute the
@@ -229,45 +201,47 @@ def _memo_enter(key: str | None) -> bool:
     them from the CacheManager so the recompute reads the new files."""
     if key is None:
         release_caches()
-        return False
+        return None
     with _SLOTS_LOCK:
-        base = _key_base(key)
+        # key[:-1] drops the stat stamps: equal bases name the same files
         for k in list(_SLOTS):
-            if k is not None and k != key and _key_base(k) == base:
+            if k is not None and k != key and k[:-1] == key[:-1]:
                 _release_slot(_SLOTS.pop(k))
-        _TLS.key = key
-        if key in _SLOTS:
-            _SLOTS[key] = _SLOTS.pop(key)  # move to MRU position
+        slot = _SLOTS.pop(key, None) or {"key": key, "frames": [], "memo": {}}
+        _SLOTS[key] = slot  # most-recently-used position
+        while len(_SLOTS) > _MAX_SLOTS:
+            _release_slot(_SLOTS.pop(next(iter(_SLOTS))))
+    return slot
+
+
+def _token_ids(
+    docs: DataFrame, variant: str, text_col: str, id_col: str, shingle: int
+) -> tuple[DataFrame, dict | None]:
+    """``(tid, slot)`` for ``docs`` on the ``"dict"`` or ``"fast"``
+    path: enters the invocation and reuses its memoized ``tid``."""
+    slot = _memo_enter(_corpus_key(docs, variant, text_col, id_col, shingle))
+    memo = {} if slot is None else slot["memo"]
+    if "tid" not in memo:
+        if variant == "dict":
+            toks = _persist_tracked(doc_tokens(docs, text_col, id_col, shingle), slot)
+            vocab = token_vocab(toks)
+            memo["tid"] = toks.join(F.broadcast(vocab), "tok").select(id_col, "tok_id")
         else:
-            _slot()
-            while len(_SLOTS) > _MAX_SLOTS:
-                _release_slot(_SLOTS.pop(next(iter(_SLOTS))))
-    return True
-
-
-def _memo() -> dict:
-    return _slot()["memo"] if _cur_key() is not None else {}
+            toks = doc_tokens(docs, text_col, id_col, shingle)
+            memo["tid"] = toks.select(id_col, F.xxhash64("tok").alias("tok_id"))
+    return memo["tid"], slot
 
 
 def doc_token_ids(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", shingle: int = 3
 ) -> DataFrame:
-    # persisted because two plan branches consume it (the vocab build
-    # and the id join) and Spark re-executes unshared subtrees per
-    # branch — without the persist the shingle explode runs twice
-    # (measured 10% of the sf0.1 near-dup wall). MEMORY_AND_DISK
-    # spills rather than OOMs; at 100 TB this cache is the standard
-    # dictionary-path tradeoff the module docstring already notes.
-    memo = _memo_enter(_corpus_key(docs, "dict", text_col, id_col, shingle))
-    m = _memo()
-    if memo and "tid" in m:
-        return m["tid"]
-    toks = _persist_tracked(doc_tokens(docs, text_col, id_col, shingle))
-    vocab = token_vocab(toks)
-    tid = toks.join(F.broadcast(vocab), "tok").select(id_col, "tok_id")
-    if memo:
-        m["tid"] = tid
-    return tid
+    # the token frame is persisted because two plan branches consume it
+    # (the vocab build and the id join) and Spark re-executes unshared
+    # subtrees per branch — without the persist the shingle explode
+    # runs twice (measured 10% of the sf0.1 near-dup wall).
+    # MEMORY_AND_DISK spills rather than OOMs; at 100 TB this cache is
+    # the standard dictionary-path tradeoff the module docstring notes.
+    return _token_ids(docs, "dict", text_col, id_col, shingle)[0]
 
 
 def minhash_signatures(tid: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -372,7 +346,9 @@ def jaccard_verify(pairs: DataFrame, sets_df: DataFrame, id_col: str = "doc_id")
     )
 
 
-def _near_duplicates_from_tid(tid: DataFrame, threshold: float, id_col: str) -> DataFrame:
+def _near_duplicates_from_tid(
+    tid: DataFrame, slot: dict | None, threshold: float, id_col: str
+) -> DataFrame:
     """Shared back half of both near-dup pipelines: one token-set
     aggregation feeds signatures AND verification. The set frame is
     persisted because three plan branches consume it (signature →
@@ -381,17 +357,17 @@ def _near_duplicates_from_tid(tid: DataFrame, threshold: float, id_col: str) -> 
     O(docs) rows × one sorted id array — the natural unit to cache at
     any scale (MEMORY_AND_DISK default spills rather than OOMs).
 
-    The pre-threshold verified-pair frame is memoized under the live
-    invocation key (threshold only filters it), so components /
+    The pre-threshold verified-pair frame is memoized in the
+    invocation's ``slot`` (threshold only filters it), so components /
     keep-best / histogram reuse one verify join instead of three."""
-    m = _memo()
-    if "verified" in m:
-        return m["verified"].filter(F.col("jaccard") >= threshold)
-    sets_df = _persist_tracked(token_sets(tid, id_col))
+    memo = {} if slot is None else slot["memo"]
+    if "verified" in memo:
+        return memo["verified"].filter(F.col("jaccard") >= threshold)
+    sets_df = _persist_tracked(token_sets(tid, id_col), slot)
     pairs = lsh_candidate_pairs(signatures_from_sets(sets_df, id_col), id_col)
     verified = jaccard_verify(pairs, sets_df, id_col)
-    if _cur_key() is not None:
-        m["verified"] = _persist_tracked(verified)
+    if slot is not None:
+        memo["verified"] = _persist_tracked(verified, slot)
     return verified.filter(F.col("jaccard") >= threshold)
 
 
@@ -399,7 +375,8 @@ def minhash_near_duplicates(
     docs: DataFrame, threshold: float = 0.5, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Full near-dup pipeline: shingle→minhash→band→bucket-join→verify."""
-    return _near_duplicates_from_tid(doc_token_ids(docs, text_col, id_col), threshold, id_col)
+    tid, slot = _token_ids(docs, "dict", text_col, id_col, 3)
+    return _near_duplicates_from_tid(tid, slot, threshold, id_col)
 
 
 def doc_token_ids_fast(
@@ -410,15 +387,7 @@ def doc_token_ids_fast(
     broadcast join. This is the 100 TB path (the dictionary variant
     exists because DuckDB cannot reproduce xxhash64 for the oracle);
     ids are 64-bit so collisions are negligible at any corpus size."""
-    memo = _memo_enter(_corpus_key(docs, "fast", text_col, id_col, shingle))
-    m = _memo()
-    if memo and "tid" in m:
-        return m["tid"]
-    toks = doc_tokens(docs, text_col, id_col, shingle)
-    tid = toks.select(id_col, F.xxhash64("tok").alias("tok_id"))
-    if memo:
-        m["tid"] = tid
-    return tid
+    return _token_ids(docs, "fast", text_col, id_col, shingle)[0]
 
 
 def minhash_near_duplicates_fast(
@@ -426,7 +395,8 @@ def minhash_near_duplicates_fast(
 ) -> DataFrame:
     """Near-dup pipeline on the xxhash64 path — identical plan shape to
     :func:`minhash_near_duplicates` minus the dictionary stage."""
-    return _near_duplicates_from_tid(doc_token_ids_fast(docs, text_col, id_col), threshold, id_col)
+    tid, slot = _token_ids(docs, "fast", text_col, id_col, 3)
+    return _near_duplicates_from_tid(tid, slot, threshold, id_col)
 
 
 # ------------------------------------------------------------------ SimHash

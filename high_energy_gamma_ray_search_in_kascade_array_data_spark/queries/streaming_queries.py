@@ -530,16 +530,26 @@ def _late_replay_dir(spark: SparkSession, sf_dir: str) -> str:
 
     The tertile/late assignment is pure integer arithmetic over
     ``unix_millis(ts)`` and ``event_id`` so the DuckDB oracle can
-    recompute the batch schedule bit-for-bit."""
+    recompute the batch schedule bit-for-bit.
+
+    An existing copy is reused only while every file still carries its
+    pinned mtime: a copy that lost them (``cp`` without ``-p``, a
+    checkout, a ``touch``) would replay in another order and give
+    another answer, so it is rebuilt."""
     import os
     import shutil
 
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.sources_multimodal import SCRATCH
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import load_table
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import load_table, stat_key
 
     tag = os.path.basename(sf_dir.rstrip("/"))
     path = os.path.join(SCRATCH, f"late_replay2_{tag}")
-    if os.path.isdir(path):
+
+    def pinned() -> bool:
+        stamps = [stat_key(os.path.join(path, f"b{k}.parquet")) for k in range(_LATE_BATCHES)]
+        return all(sk is not None and sk[0] == 1000 * (k + 1) * 10**9 for k, sk in enumerate(stamps))
+
+    if pinned():
         return path
     ev = load_table(spark, sf_dir, "events")
     mn, mx = ev.agg(
@@ -565,6 +575,8 @@ def _late_replay_dir(spark: SparkSession, sf_dir: str) -> str:
         os.rename(os.path.join(tmp, part), dst)
         shutil.rmtree(tmp)
         os.utime(dst, (1000 * (k + 1), 1000 * (k + 1)))
+    if not pinned():  # absent, or a copy that lost its pinned mtimes
+        shutil.rmtree(path, ignore_errors=True)
     try:
         os.rename(build, path)  # atomic publish; loser of a race cleans up
     except OSError:

@@ -69,55 +69,21 @@ def spread_scan(df: DataFrame) -> DataFrame:
     Streaming frames pass through untouched: micro-batch parallelism
     is the source's concern (maxFilesPerTrigger / partitions), and
     ``df.rdd`` would raise AnalysisException at plan time on a
-    streaming DataFrame.
-
-    The partition count probe (``df.rdd.getNumPartitions()`` — a
-    plan→RDD conversion) is memoized per DataFrame object: ``load_table``
-    returns cached identical frames, so repeat wrap sites skip the
-    conversion tax on the non-starved production path (VERDICT r11
-    what's-wrong #5). The value holds the frame itself so an id() can
-    never be reused by a GC'd frame. A DataFrame's partitioning is
-    immutable, so the memo can never go stale."""
+    streaming DataFrame."""
     if df.isStreaming:
         return df
     dp = df.sparkSession.sparkContext.defaultParallelism
-    hit = _NPART_MEMO.get(id(df))
-    if hit is not None and hit[0] is df:
-        nparts = hit[1]
-    else:
-        nparts = df.rdd.getNumPartitions()
-        if len(_NPART_MEMO) >= 512:
-            _NPART_MEMO.clear()
-        _NPART_MEMO[id(df)] = (df, nparts)
-    if nparts < dp:
+    if df.rdd.getNumPartitions() < dp:
         return df.repartition(dp)
     return df
 
 
-# spread_scan's plan→RDD partition-count probe, memoized per frame
-# object (see spread_scan docstring).
-_NPART_MEMO: dict = {}
-
-
-# Resolved-scan cache: (session id, path, stat key) -> (session, df).
-# The r11 build audit measured ~0.1 s of driver-side Py4J + footer
-# planning PER load_table call — a fixed cost every query pays per
-# table (a 6-table TPC-H join pays ~0.6 s before any execution), which
-# also serializes across concurrent streams. A resolved DataFrame is
-# immutable and reusable across queries in the same session (what a
-# production catalog/metastore amortizes), so cache it keyed by a
-# shallow filesystem stat key: any rewrite/append/replace of the
-# backing file(s) changes the key and forces a fresh resolution — the
-# same staleness design as the dedup memo's corpus key. Holding the
-# session object in the value pins id(spark) against reuse after GC.
-_TABLE_CACHE: dict = {}
-_TABLE_CACHE_MAX = 512
-
-
-def _stat_key(path: str):
-    """(mtime_ns, size, one-level entry stats) of the table path, or
-    None (= never cache) when the path is missing, remote, or too big
-    to stat cheaply."""
+def stat_key(path: str):
+    """(mtime_ns, size, one-level entry stats) of ``path``, or None
+    (= never cache) when the path is missing, remote, or too big to
+    stat cheaply. Any rewrite, append or replace of the file(s)
+    changes the key — the staleness rule of every memo in the
+    package."""
     try:
         st = os.stat(path)
     except OSError:
@@ -134,32 +100,50 @@ def _stat_key(path: str):
     return (st.st_mtime_ns, st.st_size, entries)
 
 
-# Raw parquet footer-schema memo for the STREAMING read path: a
-# streaming file source needs an explicit schema, which the r11 code
-# fetched with a fresh batch footer read per query (~0.15 s of
-# planning Py4J each — measured in the r12 streaming floor profile).
-# Same staleness design as _TABLE_CACHE; a schema is immutable so this
-# is planning-cost amortization, never data caching. Session-keyed
-# like _TABLE_CACHE because footer type resolution is conf-sensitive
-# (``nanosAsLong`` turns TIMESTAMP(NANOS) into bigint per session).
-_SCHEMA_CACHE: dict = {}
+# Read memo: (session id, path, stat key, build) -> (session, value).
+# A build audit measured ~0.1 s of driver-side Py4J + footer
+# planning per resolved scan — a fixed cost every query pays per
+# table, serialized across concurrent streams. A resolved DataFrame
+# or footer schema is immutable, so it is reused until the stat key
+# changes. Session-keyed because resolution is conf-sensitive
+# (``nanosAsLong`` turns TIMESTAMP(NANOS) into bigint per session);
+# holding the session in the value pins id(spark) against reuse.
+_READ_MEMO: dict = {}
+_READ_MEMO_MAX = 512
+
+
+def _cached_read(spark: SparkSession, path: str, build):
+    """``build(spark, path)``, memoized per (session, path, stat key)."""
+    sk = stat_key(path)
+    if sk is None:
+        return build(spark, path)
+    key = (id(spark), path, sk, build)
+    hit = _READ_MEMO.get(key)
+    if hit is not None and hit[0] is spark:
+        return hit[1]
+    out = build(spark, path)
+    if len(_READ_MEMO) >= _READ_MEMO_MAX:
+        _READ_MEMO.clear()
+    _READ_MEMO[key] = (spark, out)
+    return out
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.parquet(path)
+
+
+def _read_events(spark: SparkSession, path: str) -> DataFrame:
+    return normalize_events_ts(spark.read.parquet(path))
+
+
+def _footer_schema(spark: SparkSession, path: str):
+    return spark.read.parquet(path).schema
 
 
 def file_schema(spark: SparkSession, path: str):
     """Footer schema of ``path`` exactly as ``spark.read.parquet``
-    resolves it, memoized per (session, path, stat key)."""
-    sk = _stat_key(path)
-    key = (id(spark), path, sk)
-    if sk is not None:
-        hit = _SCHEMA_CACHE.get(key)
-        if hit is not None and hit[0] is spark:
-            return hit[1]
-    schema = spark.read.parquet(path).schema
-    if sk is not None:
-        if len(_SCHEMA_CACHE) >= 512:
-            _SCHEMA_CACHE.clear()
-        _SCHEMA_CACHE[key] = (spark, schema)
-    return schema
+    resolves it — the explicit schema a streaming file source needs."""
+    return _cached_read(spark, path, _footer_schema)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -176,20 +160,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    sk = _stat_key(path)
-    key = (id(spark), path, sk)
-    if sk is not None:
-        hit = _TABLE_CACHE.get(key)
-        if hit is not None and hit[0] is spark:
-            return hit[1]
-    df = spark.read.parquet(path)
-    if name == "events":
-        df = normalize_events_ts(df)
-    if sk is not None:
-        if len(_TABLE_CACHE) >= _TABLE_CACHE_MAX:
-            _TABLE_CACHE.clear()
-        _TABLE_CACHE[key] = (spark, df)
-    return df
+    return _cached_read(spark, path, _read_events if name == "events" else _read_parquet)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -84,6 +84,48 @@ def test_model_artifact_roundtrips_udf(spark, sf_dir):
         os.remove(path)
 
 
+def test_rewritten_artifact_scores_with_new_state(spark, sf_dir):
+    """A checkpoint rewritten at the SAME path mid-session must score
+    with its new weights, on both MLP scorer forms: score with state A,
+    rewrite the file with state B, score again — the second result is
+    B's forward pass (the unrolled-SQL twin), not A's. Python workers
+    are reused across jobs, so a per-worker weight cache that missed
+    the rewrite would fail here."""
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.ml import inference
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.ml import _MLP_INPUT_EXPRS, _mlp_state
+
+    state_a = _mlp_state()
+    state_b = dict(state_a, **{"fc3.bias": state_a["fc3.bias"] + 0.5})
+    df = shower_frame(spark, sf_dir).limit(200)
+    feats = F.array(*[F.expr(e).cast("double") for e in _MLP_INPUT_EXPRS])
+
+    def sql_scores(state):
+        expr = inference.mlp_score_sql(state, _MLP_INPUT_EXPRS)
+        return {r["event_id"]: r["s"] for r in df.selectExpr("event_id", f"{expr} AS s").collect()}
+
+    def max_diff(got, want):
+        assert set(got) == set(want)
+        return max(abs(got[k] - want[k]) for k in want)
+
+    want_a, want_b = sql_scores(state_a), sql_scores(state_b)
+    assert max_diff(want_a, want_b) > 1e-3  # the two states are distinguishable
+
+    os.makedirs(SCRATCH, exist_ok=True)
+    path = os.path.join(SCRATCH, f"mlp_rewrite_{os.getpid()}.npz")
+    try:
+        for make in (inference.make_mlp_scorer_udf, inference.make_mlp_scorer_iter_udf):
+            got = []
+            for state in (state_a, state_b):
+                inference.save_model_artifact(path, state)
+                score = make(path)
+                got.append({r["event_id"]: r["s"] for r in df.select("event_id", score(feats).alias("s")).collect()})
+            assert max_diff(got[0], want_a) < 1e-12, make.__name__
+            assert max_diff(got[1], want_b) < 1e-12, f"{make.__name__} scored the rewritten path with stale weights"
+    finally:
+        if os.path.exists(path):
+            os.remove(path)
+
+
 def test_sample_with_replacement_fraction(spark, sf_dir):
     """df.sample(withReplacement=True) draws ≈ fraction·N rows and is
     deterministic for a fixed seed + partitioning (X2/X3)."""

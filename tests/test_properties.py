@@ -645,6 +645,9 @@ def test_dedup_cache_invocation_keyed(spark, tmp_path):
     false hit would be a wrong answer)."""
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators import dedup
 
+    def dict_key(df):  # the key minhash_near_duplicates enters for df
+        return dedup._corpus_key(df, "dict", "text", "doc_id", 3)
+
     sf_a, sf_b = str(tmp_path / "a"), str(tmp_path / "b")
     docs_a = [(i, f"tok{i} alpha beta gamma delta epsilon zeta tok{i}") for i in range(30)]
     docs_a += [(100 + i, docs_a[i][1]) for i in range(5)]  # 5 exact dups
@@ -664,7 +667,7 @@ def test_dedup_cache_invocation_keyed(spark, tmp_path):
     dedup.release_caches()
     out1 = sorted(map(tuple, dedup.minhash_near_duplicates(ra).select("doc_a", "doc_b").collect()))
     assert out1  # the 5 planted dups must pair up
-    key_a = dedup._cur_key()
+    key_a = dict_key(ra)
     assert key_a is not None and "verified" in dedup._SLOTS[key_a]["memo"]
     n_frames = len(dedup._SLOTS[key_a]["frames"])
 
@@ -673,7 +676,7 @@ def test_dedup_cache_invocation_keyed(spark, tmp_path):
     ra2 = spark.read.parquet(f"{sf_a}/documents.parquet")
     out2 = sorted(map(tuple, dedup.minhash_near_duplicates(ra2).select("doc_a", "doc_b").collect()))
     assert out2 == out1
-    assert dedup._cur_key() == key_a
+    assert dict_key(ra2) == key_a
     assert len(dedup._SLOTS[key_a]["frames"]) == n_frames
 
     # the fast variant of the same corpus gets its OWN slot; the dict
@@ -690,7 +693,8 @@ def test_dedup_cache_invocation_keyed(spark, tmp_path):
     # in-memory frame: no memoization (full flush), no stale reuse
     mem = spark.createDataFrame(docs_a, "doc_id long, text string")
     out4 = sorted(map(tuple, dedup.minhash_near_duplicates(mem).select("doc_a", "doc_b").collect()))
-    assert dedup._cur_key() is None
+    assert dict_key(mem) is None
+    assert list(dedup._SLOTS) == [None]  # keyed slots flushed; only the keyless run's frames
     assert out4 == out1
     dedup.release_caches()
     assert not dedup._SLOTS
@@ -716,8 +720,8 @@ def test_dedup_cache_invalidated_on_rewrite(spark, tmp_path):
     r1 = spark.read.parquet(f"{path}/documents.parquet")
     out1 = sorted(map(tuple, dedup.minhash_near_duplicates(r1).select("doc_a", "doc_b").collect()))
     assert out1  # the planted dups (plus shared-boilerplate pairs) must pair up
-    key1 = dedup._cur_key()
-    assert key1 is not None
+    key1 = dedup._corpus_key(r1, "dict", "text", "doc_id", 3)
+    assert key1 is not None and key1 in dedup._SLOTS
 
     # rewrite the SAME path with a no-dup corpus, reproducing a stable
     # single file name (the CSV/JSON/hand-fixture overwrite scenario)
@@ -741,7 +745,9 @@ def test_dedup_cache_invalidated_on_rewrite(spark, tmp_path):
     # the rewritten corpus has zero near-dups; a stale memo hit would
     # have returned out1's 4 pairs
     assert out2 == []
-    assert dedup._cur_key() != key1
+    key2 = dedup._corpus_key(r2, "dict", "text", "doc_id", 3)
+    assert key2 != key1 and key2[:-1] == key1[:-1]  # same files, new stamps
+    assert key1 not in dedup._SLOTS  # the stale sibling was released eagerly
     dedup.release_caches()
 
 

@@ -114,14 +114,15 @@ def test_memo_stat_key_invalidates_on_inplace_overwrite(spark, tmp_path):
     assert second == []  # stale memo would replay the old pair
 
 
-def test_memo_current_key_is_thread_local(spark, tmp_path):
-    """r10 hardening (found by the concurrency probe): the dedup
-    memo's CURRENT-invocation key must be thread-local. With a global
-    key, thread B entering corpus-B's key between thread A's
-    _memo_enter and A's result construction makes A read B's slot —
-    a cross-corpus cache hit. Deterministic interleaving via
-    barriers; under the pre-fix global key thread A reports corpus
-    B's near-dup pair for corpus A."""
+def test_memo_slot_is_explicit_across_threads(spark, tmp_path):
+    """Found by the concurrency probe: a near-dup
+    pipeline must use the slot of the invocation it entered, even when
+    another driver thread enters a different corpus in between. The
+    entry points pass their slot down explicitly; with a global
+    current key, thread B entering corpus B between thread A's entry
+    and A's result construction made A read B's slot — a cross-corpus
+    cache hit reporting corpus B's near-dup pair for corpus A.
+    Deterministic interleaving via barriers."""
     import threading
 
     import pandas as pd
@@ -142,7 +143,7 @@ def test_memo_current_key_is_thread_local(spark, tmp_path):
     )
 
     dedup.release_caches()
-    # warm corpus B's slot so the stale-hit has something to serve
+    # warm corpus B's slot so a stale hit has something to serve
     assert len(dedup.minhash_near_duplicates(spark.read.parquet(pb_path)).collect()) == 1
 
     b1, b2 = threading.Barrier(2), threading.Barrier(2)
@@ -150,20 +151,22 @@ def test_memo_current_key_is_thread_local(spark, tmp_path):
 
     def thread_a():
         docs = spark.read.parquet(pa_path)
-        tid = dedup.doc_token_ids(docs)  # enters corpus A's key
-        b1.wait()  # let thread B enter corpus B's key now
+        tid, slot = dedup._token_ids(docs, "dict", "text", "doc_id", 3)  # enters corpus A
+        b1.wait()  # let thread B enter corpus B now
         b2.wait()
-        # pre-fix: _memo() here resolves to B's slot -> B's cached pair
-        out["a"] = dedup._near_duplicates_from_tid(tid, 0.5, "doc_id").collect()
+        out["slot_a"] = slot
+        out["a"] = dedup._near_duplicates_from_tid(tid, slot, 0.5, "doc_id").collect()
 
     def thread_b():
         b1.wait()
         docs = spark.read.parquet(pb_path)
-        dedup.doc_token_ids(docs)  # enters corpus B's key (global-key poison)
+        dedup.doc_token_ids(docs)  # enters corpus B (most-recently-used slot)
+        out["key_b"] = dedup._corpus_key(docs, "dict", "text", "doc_id", 3)
         b2.wait()
 
     ta, tb = threading.Thread(target=thread_a), threading.Thread(target=thread_b)
     ta.start(); tb.start(); ta.join(); tb.join()
+    assert out["slot_a"]["key"] != out["key_b"]
     assert out["a"] == [], "thread A served corpus B's cached near-dup pair"
 
 

@@ -286,6 +286,40 @@ def test_late_data_conservation_from_engine_telemetry(spark, sf_dir):
     assert emitted + dropped + unflushed == total_in
 
 
+def test_late_replay_rebuilt_when_pinned_mtimes_are_lost(spark, sf_dir):
+    """The late-data replay fixture fixes its arrival order by pinned
+    file mtimes. A copy that lost them (a checkout, ``cp`` without
+    ``-p``, a ``touch``) must be rebuilt, not trusted: replaying the
+    same files in another order gives another answer (866 rows instead
+    of 841 at sf0.01). Stamp the files with "now", newest first, then
+    the query must still match its DuckDB oracle exactly."""
+    import time
+
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.streaming_queries import (
+        _LATE_BATCHES,
+        _late_replay_dir,
+    )
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.registry import corpus
+    from tests.oracle_utils import compare_frames, duckdb_con, exact_hash_problems
+
+    replay = _late_replay_dir(spark, sf_dir)
+    now = time.time()
+    for k in range(_LATE_BATCHES):
+        os.utime(os.path.join(replay, f"b{k}.parquet"), (now - k, now - k))
+
+    q = corpus()["stream_late_data_accounting"]
+    spark_pdf = q.fn(spark, sf_dir).toPandas()
+    con = duckdb_con(sf_dir)
+    try:
+        oracle_pdf = con.execute(q.oracle).fetchdf()
+    finally:
+        con.close()
+    assert not compare_frames(spark_pdf, oracle_pdf)
+    assert not exact_hash_problems(spark_pdf, oracle_pdf)
+    for k in range(_LATE_BATCHES):  # the rebuild pinned the order again
+        assert os.stat(os.path.join(replay, f"b{k}.parquet")).st_mtime == 1000 * (k + 1)
+
+
 def test_stream_calibration_equals_batch(spark, sf_dir):
     """The update-mode ECE monitor must equal the batch reliability
     diagram on every shared column after an AvailableNow drain — the
