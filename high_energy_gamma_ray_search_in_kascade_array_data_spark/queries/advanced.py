@@ -337,7 +337,7 @@ def q_ivf_partitioned_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame
     import os
     import shutil
 
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.sources_multimodal import SCRATCH
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH
 
     e = load_table(spark, sf_dir, "embeddings")
     as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))

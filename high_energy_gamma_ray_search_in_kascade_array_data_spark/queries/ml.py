@@ -134,7 +134,7 @@ def q_mlp_artifact_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted-artifact forward pass is hash-checked end-to-end."""
     import os
 
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.sources_multimodal import SCRATCH
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH
 
     os.makedirs(SCRATCH, exist_ok=True)
     artifact = os.path.join(SCRATCH, "mlp_head.npz")
@@ -175,7 +175,7 @@ def _cnn_scored_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow seam. Returns (event_id, logit, sigmoid[raw])."""
     import os
 
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.sources_multimodal import SCRATCH
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import load_table
 
     os.makedirs(SCRATCH, exist_ok=True)
@@ -393,7 +393,7 @@ def q_mlp_iter_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     are observationally equivalent, not just both plausible."""
     import os
 
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.sources_multimodal import SCRATCH
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import load_table  # noqa: F401
 
     os.makedirs(SCRATCH, exist_ok=True)

@@ -15,44 +15,59 @@ from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators import m
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.common import SHOWER_CTE, rnd_col, shower_frame
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.registry import register
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources import sink
-from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import load_table, spread_scan
+from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import (
+    SCRATCH,
+    derived_fixture,
+    load_table,
+    spread_scan,
+)
 
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
 
-# Concurrent drivers (the FAIR-scheduler contention probe, a multi-tenant
-# harness) can invoke two fixture-sharing queries at once; both seeing
-# stale=True and racing write.mode("overwrite") on the same directory
-# corrupts the layout mid-read. Same hazard class as the dedup memo's
-# global slot table (operators/dedup.py) — serialized the same way.
-_FIXTURE_LOCK = __import__("threading").Lock()
+def _media_files(spark: SparkSession, sf_dir: str, mod: int, rem: int, encode, kind: str) -> DataFrame:
+    """Media rows read back from real files on disk: one
+    ``<event_id>.<ext>`` per event with ``event_id % mod == rem``,
+    written once per SF by ``encode(event_id) -> bytes`` (one bounded
+    collect of the sampled ids, the same license as the NPZ fixture
+    archive), then scanned with ``binaryFile`` and the media_id parsed
+    back from the path."""
+    ext = kind.split("/")[1]
 
-def _ids_fixture_stale(fix_dir: str, ids: list) -> str:
-    """Fixture dirs are keyed by SF tag, but the driver regenerates
-    /root/testdata between rounds — if the sampled id set ever changes
-    under the same tag, a stale fixture would silently mismatch the
-    oracle.  The _DONE marker therefore records an id-set fingerprint;
-    a mismatch wipes the dir for a rebuild.  Returns the fingerprint.
+    def build(tmp: str) -> None:
+        ev = load_table(spark, sf_dir, "events")
+        ids = [
+            r[0]
+            for r in ev.filter(F.col("event_id") % mod == rem)
+            .select("event_id")
+            .distinct()
+            .collect()
+        ]
+        os.makedirs(tmp)
+        for e in ids:
+            with open(os.path.join(tmp, f"{e}.{ext}"), "wb") as f:
+                f.write(encode(e))
 
-    The fingerprint is a sha256 over the sorted ids — an
-    order-independent digest that (unlike the earlier count:sum pair,
-    which collides for e.g. {1,4} vs {2,3}) cannot match a different
-    sampled id set, so a regenerated fixture can never silently serve
-    stale media files against a fresh oracle."""
-    import hashlib
-    import shutil
-
-    h = hashlib.sha256()
-    for i in sorted(ids):
-        h.update(str(i).encode())
-        h.update(b",")
-    fp = f"{len(ids)}:{h.hexdigest()}"
-    marker = os.path.join(fix_dir, "_DONE")
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read().strip() != fp:
-                shutil.rmtree(fix_dir)
-    return fp
-
+    tag = os.path.basename(sf_dir.rstrip(chr(47)))
+    fix_dir = derived_fixture(
+        os.path.join(SCRATCH, f"media_{kind.replace('/', '_')}_{tag}"),
+        [os.path.join(sf_dir, "events.parquet")],
+        version=1,
+        build=build,
+    )
+    return (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", f"*.{ext}")
+        .load(fix_dir)
+        .select(
+            F.regexp_extract(F.col("path"), rf"(\d+)\.{ext}$", 1)
+            .cast("long")
+            .alias("media_id"),
+            F.lit(kind).alias("kind"),
+            F.col("content").alias("payload"),
+            F.lit(8).alias("width"),
+            F.lit(8).alias("height"),
+        )
+        .transform(spread_scan)
+    )
 
 
 @register(
@@ -253,43 +268,13 @@ def q_multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     query path — distributed scan, decode, features — is real."""
     import numpy as np
 
-    ev = load_table(spark, sf_dir, "events")
-    ids = [
-        r[0]
-        for r in ev.filter(F.col("event_id") % 250 == 0)
-        .select("event_id")
-        .distinct()
-        .collect()
-    ]
-    tag = os.path.basename(sf_dir.rstrip(chr(47)))
-    fix_dir = os.path.join(SCRATCH, f"png_real_{tag}")
-    marker = os.path.join(fix_dir, "_DONE")
-    fp = _ids_fixture_stale(fix_dir, ids)
-    if not os.path.exists(marker):
-        os.makedirs(fix_dir, exist_ok=True)
-        for e in ids:
-            img = ((e * 7 + np.arange(64, dtype=np.int64) * 13) % 256).astype(
-                np.uint8
-            ).reshape(8, 8)
-            with open(os.path.join(fix_dir, f"{e}.png"), "wb") as f:
-                f.write(multimodal.encode_png_gray(img))
-        with open(marker, "w") as f:
-            f.write(fp)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .load(fix_dir)
-        .select(
-            F.regexp_extract(F.col("path"), r"(\d+)\.png$", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.lit("image/png").alias("kind"),
-            F.col("content").alias("payload"),
-            F.lit(8).alias("width"),
-            F.lit(8).alias("height"),
-        )
-        .transform(spread_scan)
-    )
+    def encode(e: int) -> bytes:
+        img = ((e * 7 + np.arange(64, dtype=np.int64) * 13) % 256).astype(
+            np.uint8
+        ).reshape(8, 8)
+        return multimodal.encode_png_gray(img)
+
+    media = _media_files(spark, sf_dir, 250, 0, encode, "image/png")
     return multimodal.decode_media(media, codec="real")
 
 
@@ -576,36 +561,15 @@ def q_jsonl_roundtrip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def events_by_type_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Build (or reuse) the hive-partitioned events layout shared by
-    the partition-pruning queries: events written with
-    partitionBy("event_type"), the canonical layout choice when one
-    column dominates predicates. Idempotent per SF — but the driver
-    regenerates /root/testdata between rounds, so the reuse is guarded
-    by a cheap fingerprint of the live table (count + id sum); a
-    mismatch forces a rebuild instead of silently serving a stale
-    layout (same device as _ids_fixture_stale for the codec
-    fixtures). Returns (fact layout path, event_type dim path)."""
-    d = load_table(spark, sf_dir, "events")
-    os.makedirs(SCRATCH, exist_ok=True)
-    tag = os.path.basename(sf_dir.rstrip(chr(47)))
-    path = os.path.join(SCRATCH, f"events_by_type_{tag}")
-    marker = os.path.join(path, "_SUCCESS")
-    n, s = d.agg(F.count(F.lit(1)), F.sum("event_id")).first()
-    fp = f"v3:{n}:{s}"
-    fp_file = os.path.join(SCRATCH, f"events_by_type_{tag}._FPRINT")
-    dim_path = os.path.join(SCRATCH, f"event_type_dim_{tag}")
-    with _FIXTURE_LOCK:
-        stale = True
-        if (
-            os.path.exists(marker)
-            and os.path.exists(fp_file)
-            and os.path.exists(os.path.join(dim_path, "_SUCCESS"))
-        ):
-            with open(fp_file) as f:
-                stale = f.read().strip() != fp
-        if not stale:
-            return path, dim_path
-        d.write.mode("overwrite").partitionBy("event_type").parquet(path)
+    """The hive-partitioned events layout shared by the partition-pruning
+    queries: ``fact/`` is events written with partitionBy("event_type"),
+    the canonical layout when one column dominates predicates, and
+    ``dim/`` its event_type dimension, published together. Returns
+    (fact path, dim path)."""
+
+    def build(tmp: str) -> None:
+        d = load_table(spark, sf_dir, "events")
+        d.write.partitionBy("event_type").parquet(os.path.join(tmp, "fact"))
         # materialize the star-schema dimension alongside the fact: one
         # row per event_type with its live row count — the shape a real
         # warehouse keeps so dimension-filtered joins never re-scan the
@@ -621,12 +585,17 @@ def events_by_type_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 ).otherwise(F.lit("engagement")),
             )
             .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(dim_path)
+            .write.parquet(os.path.join(tmp, "dim"))
         )
-        with open(fp_file, "w") as f:
-            f.write(fp)
-        return path, dim_path
+
+    tag = os.path.basename(sf_dir.rstrip(chr(47)))
+    path = derived_fixture(
+        os.path.join(SCRATCH, f"events_by_type_{tag}"),
+        [os.path.join(sf_dir, "events.parquet")],
+        version=1,
+        build=build,
+    )
+    return os.path.join(path, "fact"), os.path.join(path, "dim")
 
 
 @register(
@@ -897,43 +866,13 @@ def q_multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators.gif import encode_gif_gray
 
-    ev = load_table(spark, sf_dir, "events")
-    ids = [
-        r[0]
-        for r in ev.filter(F.col("event_id") % 250 == 100)
-        .select("event_id")
-        .distinct()
-        .collect()
-    ]
-    tag = os.path.basename(sf_dir.rstrip(chr(47)))
-    fix_dir = os.path.join(SCRATCH, f"gif_real_{tag}")
-    marker = os.path.join(fix_dir, "_DONE")
-    fp = _ids_fixture_stale(fix_dir, ids)
-    if not os.path.exists(marker):
-        os.makedirs(fix_dir, exist_ok=True)
-        for e in ids:
-            img = ((e * 11 + np.arange(64, dtype=np.int64) * 17) % 256).astype(
-                np.uint8
-            ).reshape(8, 8)
-            with open(os.path.join(fix_dir, f"{e}.gif"), "wb") as f:
-                f.write(encode_gif_gray(img))
-        with open(marker, "w") as f:
-            f.write(fp)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.gif")
-        .load(fix_dir)
-        .select(
-            F.regexp_extract(F.col("path"), r"(\d+)\.gif$", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.lit("image/gif").alias("kind"),
-            F.col("content").alias("payload"),
-            F.lit(8).alias("width"),
-            F.lit(8).alias("height"),
-        )
-        .transform(spread_scan)
-    )
+    def encode(e: int) -> bytes:
+        img = ((e * 11 + np.arange(64, dtype=np.int64) * 17) % 256).astype(
+            np.uint8
+        ).reshape(8, 8)
+        return encode_gif_gray(img)
+
+    media = _media_files(spark, sf_dir, 250, 100, encode, "image/gif")
     return multimodal.decode_media(media, codec="real")
 
 
@@ -968,46 +907,16 @@ def q_multimodal_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFra
 
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators.gif import encode_gif_animation
 
-    ev = load_table(spark, sf_dir, "events")
-    ids = [
-        r[0]
-        for r in ev.filter(F.col("event_id") % 500 == 7)
-        .select("event_id")
-        .distinct()
-        .collect()
-    ]
-    tag = os.path.basename(sf_dir.rstrip(chr(47)))
-    fix_dir = os.path.join(SCRATCH, f"gifanim_real_{tag}")
-    marker = os.path.join(fix_dir, "_DONE")
-    fp = _ids_fixture_stale(fix_dir, ids)
-    if not os.path.exists(marker):
-        os.makedirs(fix_dir, exist_ok=True)
-        for e in ids:
-            frames = [
-                ((e * 7 + f * 31 + np.arange(64, dtype=np.int64) * 13) % 256)
-                .astype(np.uint8)
-                .reshape(8, 8)
-                for f in range(8)
-            ]
-            with open(os.path.join(fix_dir, f"{e}.gif"), "wb") as fh:
-                fh.write(encode_gif_animation(frames))
-        with open(marker, "w") as fh:
-            fh.write(fp)
-    media = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.gif")
-        .load(fix_dir)
-        .select(
-            F.regexp_extract(F.col("path"), r"(\d+)\.gif$", 1)
-            .cast("long")
-            .alias("media_id"),
-            F.lit("video/gif").alias("kind"),
-            F.col("content").alias("payload"),
-            F.lit(8).alias("width"),
-            F.lit(8).alias("height"),
-        )
-        .transform(spread_scan)
-    )
+    def encode(e: int) -> bytes:
+        frames = [
+            ((e * 7 + f * 31 + np.arange(64, dtype=np.int64) * 13) % 256)
+            .astype(np.uint8)
+            .reshape(8, 8)
+            for f in range(8)
+        ]
+        return encode_gif_animation(frames)
+
+    media = _media_files(spark, sf_dir, 500, 7, encode, "video/gif")
     return multimodal.video_frame_features(media, every=2)
 
 

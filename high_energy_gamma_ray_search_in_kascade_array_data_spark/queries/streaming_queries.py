@@ -321,7 +321,7 @@ def q_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.sources_multimodal import SCRATCH
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH
 
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     sink_path = os.path.join(SCRATCH, f"feb_sink_{sf_tag}")
@@ -517,71 +517,61 @@ _LATE_DELAY = "1 hour"
 
 
 def _late_replay_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per SF, atomically) a 3-file arrival-ordered replay
-    copy of ``events``: file k holds time-tertile k, except that the
-    10% of rows with ``event_id % 10 == 0`` arrive TWO files late —
-    stragglers that land after their windows have already been
-    finalized (one file late would still find the window open, because
-    eviction lags the watermark by one batch — see the query
-    docstring).  File mtimes are pinned ascending so the streaming
-    file source replays them in a deterministic order;
-    ``maxFilesPerTrigger = 1`` then yields exactly one microbatch per
-    file.
+    """A 3-file arrival-ordered replay copy of ``events``: file k holds
+    time-tertile k, except that the 10% of rows with
+    ``event_id % 10 == 0`` arrive TWO files late — stragglers that land
+    after their windows have already been finalized (one file late
+    would still find the window open, because eviction lags the
+    watermark by one batch — see the query docstring).  File mtimes are
+    pinned ascending so the streaming file source replays them in a
+    deterministic order; ``maxFilesPerTrigger = 1`` then yields exactly
+    one microbatch per file.  The fixture's stamp holds those mtimes,
+    so a copy that lost them (``cp`` without ``-p``, a ``touch``) is
+    rebuilt rather than replayed in another order.
 
     The tertile/late assignment is pure integer arithmetic over
     ``unix_millis(ts)`` and ``event_id`` so the DuckDB oracle can
-    recompute the batch schedule bit-for-bit.
-
-    An existing copy is reused only while every file still carries its
-    pinned mtime: a copy that lost them (``cp`` without ``-p``, a
-    checkout, a ``touch``) would replay in another order and give
-    another answer, so it is rebuilt."""
+    recompute the batch schedule bit-for-bit."""
     import os
     import shutil
 
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.sources_multimodal import SCRATCH
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import load_table, stat_key
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import (
+        SCRATCH,
+        derived_fixture,
+        load_table,
+    )
+
+    def build(tmp: str) -> None:
+        ev = load_table(spark, sf_dir, "events")
+        mn, mx = ev.agg(
+            F.min(F.unix_millis("ts")), F.max(F.unix_millis("ts"))
+        ).collect()[0]
+        bb = F.least(
+            F.expr(f"(unix_millis(ts) - {mn}) * 3 DIV {mx - mn + 1}"),
+            F.lit(_LATE_BATCHES - 1),
+        )
+        b = F.least(
+            F.when(F.col("event_id") % 10 == 0, bb + 2).otherwise(bb),
+            F.lit(_LATE_BATCHES - 1),
+        )
+        tagged = ev.withColumn("__b", b)
+        os.makedirs(tmp)
+        for k in range(_LATE_BATCHES):
+            part_dir = os.path.join(tmp, f"_tmp{k}")
+            tagged.filter(F.col("__b") == k).drop("__b").coalesce(1).write.parquet(part_dir)
+            part = next(p for p in os.listdir(part_dir) if p.endswith(".parquet"))
+            dst = os.path.join(tmp, f"b{k}.parquet")
+            os.rename(os.path.join(part_dir, part), dst)
+            shutil.rmtree(part_dir)
+            os.utime(dst, (1000 * (k + 1), 1000 * (k + 1)))
 
     tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(SCRATCH, f"late_replay2_{tag}")
-
-    def pinned() -> bool:
-        stamps = [stat_key(os.path.join(path, f"b{k}.parquet")) for k in range(_LATE_BATCHES)]
-        return all(sk is not None and sk[0] == 1000 * (k + 1) * 10**9 for k, sk in enumerate(stamps))
-
-    if pinned():
-        return path
-    ev = load_table(spark, sf_dir, "events")
-    mn, mx = ev.agg(
-        F.min(F.unix_millis("ts")), F.max(F.unix_millis("ts"))
-    ).collect()[0]
-    bb = F.least(
-        F.expr(f"(unix_millis(ts) - {mn}) * 3 DIV {mx - mn + 1}"),
-        F.lit(_LATE_BATCHES - 1),
+    return derived_fixture(
+        os.path.join(SCRATCH, f"late_replay2_{tag}"),
+        [os.path.join(sf_dir, "events.parquet")],
+        version=1,
+        build=build,
     )
-    b = F.least(
-        F.when(F.col("event_id") % 10 == 0, bb + 2).otherwise(bb),
-        F.lit(_LATE_BATCHES - 1),
-    )
-    tagged = ev.withColumn("__b", b)
-    build = path + ".build"
-    shutil.rmtree(build, ignore_errors=True)
-    os.makedirs(build)
-    for k in range(_LATE_BATCHES):
-        tmp = os.path.join(build, f"_tmp{k}")
-        tagged.filter(F.col("__b") == k).drop("__b").coalesce(1).write.parquet(tmp)
-        part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
-        dst = os.path.join(build, f"b{k}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (1000 * (k + 1), 1000 * (k + 1)))
-    if not pinned():  # absent, or a copy that lost its pinned mtimes
-        shutil.rmtree(path, ignore_errors=True)
-    try:
-        os.rename(build, path)  # atomic publish; loser of a race cleans up
-    except OSError:
-        shutil.rmtree(build, ignore_errors=True)
-    return path
 
 
 @register(
@@ -771,7 +761,7 @@ def q_stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     import os
     import shutil
 
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.sources_multimodal import SCRATCH
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH
 
     replay = _late_replay_dir(spark, sf_dir)
     tag = os.path.basename(sf_dir.rstrip("/"))

@@ -560,7 +560,7 @@ def q_rerank_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.ml import inference
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.ml import _mlp_state
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.sources_multimodal import SCRATCH
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH
 
     os.makedirs(SCRATCH, exist_ok=True)
     artifact = os.path.join(SCRATCH, "mlp_head_rerank.npz")

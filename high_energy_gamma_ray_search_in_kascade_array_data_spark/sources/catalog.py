@@ -11,6 +11,8 @@ pruning for free, which the reference performed by hand
 from __future__ import annotations
 
 import os
+import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -82,8 +84,8 @@ def stat_key(path: str):
     """(mtime_ns, size, one-level entry stats) of ``path``, or None
     (= never cache) when the path is missing, remote, or too big to
     stat cheaply. Any rewrite, append or replace of the file(s)
-    changes the key — the staleness rule of every memo in the
-    package."""
+    changes the key — the staleness rule of every memo and derived
+    fixture in the package."""
     try:
         st = os.stat(path)
     except OSError:
@@ -98,6 +100,57 @@ def stat_key(path: str):
             return None  # big real table: listing cost rivals the read
         entries = tuple((e.name, e.stat().st_mtime_ns, e.stat().st_size) for e in es)
     return (st.st_mtime_ns, st.st_size, entries)
+
+
+# Derived fixtures (media files, partitioned layouts, replay copies)
+# live here, beside the checkout, one entry per fixture and SF tag.
+SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
+
+_DERIVED_LOCK = threading.Lock()
+
+
+def derived_fixture(path: str, sources, version: int, build) -> str:
+    """Return ``path``, a fixture derived from the files ``sources``.
+
+    It is reused while the sidecar ``<path>.stamp`` still equals
+    (version, each source's realpath and stat key, the fixture's own
+    stat key). Otherwise ``build(tmp)`` writes a fresh copy into
+    ``<path>.build``, that copy replaces ``path`` by rename, and only
+    then is the stamp written: a build that raises publishes nothing.
+    A source with no stat key is rebuilt on every call, as the read
+    memo never caches it; a fixture too big to list is stamped by
+    version and sources alone. One lock serializes concurrent drivers
+    sharing a fixture."""
+    stamp_path = path + ".stamp"
+    with _DERIVED_LOCK:
+        src = tuple((os.path.realpath(s), stat_key(s)) for s in sources)
+
+        def stamp() -> str:
+            return repr((version, src, stat_key(path)))
+
+        try:
+            with open(stamp_path) as f:
+                old = f.read()
+        except OSError:
+            old = None
+        if old == stamp() and os.path.exists(path) and all(sk is not None for _, sk in src):
+            return path
+        tmp, prev = path + ".build", path + ".old"
+        for d in (tmp, prev):
+            shutil.rmtree(d, ignore_errors=True)
+        try:
+            build(tmp)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        if os.path.exists(path):
+            os.rename(path, prev)
+        os.rename(tmp, path)
+        shutil.rmtree(prev, ignore_errors=True)
+        with open(stamp_path + ".tmp", "w") as f:
+            f.write(stamp())
+        os.replace(stamp_path + ".tmp", stamp_path)
+        return path
 
 
 # Read memo: (session id, path, stat key, build) -> (session, value).

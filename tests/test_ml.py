@@ -11,8 +11,7 @@ import pyspark.sql.functions as F
 
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.ml import pipeline
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.common import shower_frame
-
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
+from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH
 
 
 def test_pipeline_model_persistence_roundtrip(spark, sf_dir):

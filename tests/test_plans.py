@@ -472,12 +472,12 @@ def test_dynamic_partition_pruning_prunes_at_runtime(spark, sf_dir):
     the dim-selected partitions (2 money types of 5) — guarding against
     the silent dynamicpruningexpression(true) runtime fallback the r11
     probe caught with a window-shaped dim subtree."""
-    df = _q("dynamic_partition_pruning_join", spark, sf_dir)
-    scans = _fact_scan_runtime_metrics(df, "events_by_type")
-    assert scans, "fact scan not found in executed plan"
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.sources_multimodal import events_by_type_fixture
 
+    df = _q("dynamic_partition_pruning_join", spark, sf_dir)
     fact_path, _ = events_by_type_fixture(spark, sf_dir)
+    scans = _fact_scan_runtime_metrics(df, fact_path)
+    assert scans, "fact scan not found in executed plan"
     total_rows = spark.read.parquet(fact_path).count()
     for n_parts, n_rows, _pruning_ms in scans:
         assert n_parts == 2, f"expected 2 pruned partitions, scanned {n_parts}"

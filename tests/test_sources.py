@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import load_table
 
@@ -186,7 +187,7 @@ def test_npz_stream_reader_incremental_pickup(spark, sf_dir):
 
     import numpy as np
 
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.sources_multimodal import SCRATCH
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.npz_datasource import NpzDataSource
 
     # dirs are TEST-private: the corpus query npz_stream_datasource
@@ -240,7 +241,7 @@ def test_foreach_batch_checkpoint_no_redelivery(spark, sf_dir):
     import os
     import shutil
 
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.sources_multimodal import SCRATCH
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.streaming import core
 
     sink_path = os.path.join(SCRATCH, "feb_redelivery_sink")
@@ -459,37 +460,49 @@ def test_spread_scan_is_conditional(spark, sf_dir):
     assert same is wide  # identity — no plan change, no exchange added
 
 
-def test_events_by_type_fixture_concurrent_build_race(spark, sf_dir):
-    """Two queries share the events_by_type layout; under a concurrent
-    driver (the FAIR contention probe scenario) both used to be able to
-    see stale=True and race write.mode("overwrite") on the same
-    directory. The build is now serialized under _FIXTURE_LOCK: wipe
-    the fixture, invoke from 4 threads at once, and every thread must
-    get a readable, identical layout (and the fact must have been
-    written exactly once — the dim fingerprint file is whole)."""
+def test_events_by_type_fixture_concurrent_build_race(spark, sf_dir, monkeypatch):
+    """Two queries share the events_by_type layout, and a concurrent
+    driver (the FAIR contention probe scenario) can ask for it from
+    several threads at once. Wipe the fixture and invoke from 4
+    threads: every thread must get one identical, readable layout, and
+    the build must run exactly once. A second call with unchanged
+    sources reuses the fixture without rewriting its stamp, and a
+    build that raises publishes nothing: no ``<path>.build`` is left,
+    no new stamp is written, and the previous fixture stays readable."""
     import shutil
     import threading
 
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.sources_multimodal import (
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries import sources_multimodal
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import (
         SCRATCH,
-        events_by_type_fixture,
+        derived_fixture,
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    for victim in (f"events_by_type_{tag}", f"event_type_dim_{tag}"):
-        shutil.rmtree(f"{SCRATCH}/{victim}", ignore_errors=True)
-    fp_file = f"{SCRATCH}/events_by_type_{tag}._FPRINT"
-    if os.path.exists(fp_file):
-        os.remove(fp_file)
+    path = f"{SCRATCH}/events_by_type_{tag}"
+    stamp = path + ".stamp"
+    shutil.rmtree(path, ignore_errors=True)
+    if os.path.exists(stamp):
+        os.remove(stamp)
 
+    builds = []
+
+    def counting(fix_path, sources, version, build):
+        def counted(tmp):
+            builds.append(tmp)
+            build(tmp)
+
+        return derived_fixture(fix_path, sources, version, counted)
+
+    monkeypatch.setattr(sources_multimodal, "derived_fixture", counting)
     results, errors = [], []
 
     def worker():
         try:
-            fact, dim = events_by_type_fixture(spark, sf_dir)
+            fact, dim = sources_multimodal.events_by_type_fixture(spark, sf_dir)
             n_fact = spark.read.parquet(fact).count()
             n_dim = spark.read.parquet(dim).count()
-            results.append((n_fact, n_dim))
+            results.append((fact, dim, n_fact, n_dim))
         except Exception as e:  # noqa: BLE001
             errors.append(repr(e))
 
@@ -497,7 +510,142 @@ def test_events_by_type_fixture_concurrent_build_race(spark, sf_dir):
     for t in threads:
         t.start()
     for t in threads:
-        t.join()
+        t.join(600)
+    assert not any(t.is_alive() for t in threads)
     assert not errors, errors
     assert len(set(results)) == 1, results
-    assert results[0][1] == 5  # the 5 event types
+    fact, _, n_fact, n_dim = results[0]
+    assert n_dim == 5  # the 5 event types
+    assert len(builds) == 1, builds
+
+    stamped = os.stat(stamp).st_mtime_ns
+    assert sources_multimodal.events_by_type_fixture(spark, sf_dir)[0] == fact
+    assert len(builds) == 1
+    assert os.stat(stamp).st_mtime_ns == stamped
+
+    def broken(tmp):
+        os.makedirs(tmp)
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        derived_fixture(path, [os.path.join(sf_dir, "events.parquet")], -1, broken)
+    assert not os.path.exists(path + ".build")
+    assert os.stat(stamp).st_mtime_ns == stamped
+    assert spark.read.parquet(fact).count() == n_fact
+
+
+def _copy_sf(sf_dir, tmp_path):
+    """A writable copy of the scale-factor directory under ``tmp_path``,
+    keeping its basename (the SF tag the derived fixtures are keyed by)."""
+    import shutil
+
+    dst = tmp_path / os.path.basename(sf_dir.rstrip("/"))
+    dst.mkdir()
+    for name in os.listdir(sf_dir):
+        shutil.copyfile(os.path.join(sf_dir, name), dst / name)
+    return str(dst)
+
+
+FIXTURE_QUERIES = (
+    "partition_pruned_read",
+    "dynamic_partition_pruning_join",
+    "stream_late_data_accounting",
+    "stream_foreach_batch_upsert",
+)
+
+
+@pytest.mark.parametrize("name", FIXTURE_QUERIES)
+def test_fixture_queries_follow_a_rewritten_source(spark, sf_dir, tmp_path, name):
+    """A derived fixture must follow its source table, not just the SF
+    tag. The copy keeps every ``event_id`` (so id-only fingerprints
+    cannot tell it apart) but rotates ``event_type``, shifts ``ts`` and
+    scales ``value``. Run the query on the original, on the copy and on
+    the original again: each answer must equal its own DuckDB oracle."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.registry import corpus
+    from tests.oracle_utils import compare_frames, duckdb_con, exact_hash_problems
+
+    copy = _copy_sf(sf_dir, tmp_path)
+    events = os.path.join(copy, "events.parquet")
+    t = pq.read_table(events)
+    types = sorted(set(t.column("event_type").to_pylist()))
+    rotate = {a: types[(k + 1) % len(types)] for k, a in enumerate(types)}
+    shift = pa.scalar(datetime.timedelta(minutes=37), pa.duration(t.schema.field("ts").type.unit))
+    for col, arr in (
+        ("event_type", pa.array([rotate[v] for v in t.column("event_type").to_pylist()], pa.string())),
+        ("ts", pc.add(t.column("ts"), shift)),
+        ("value", pc.multiply(t.column("value"), 2.0)),
+    ):
+        t = t.set_column(t.schema.get_field_index(col), col, arr)
+    pq.write_table(t, events)
+
+    q = corpus()[name]
+    for d in (sf_dir, copy, sf_dir):
+        spark_pdf = q.fn(spark, d).toPandas()
+        con = duckdb_con(d)
+        try:
+            oracle_pdf = con.execute(q.oracle).fetchdf()
+        finally:
+            con.close()
+        assert not compare_frames(spark_pdf, oracle_pdf), (d, compare_frames(spark_pdf, oracle_pdf))
+        assert not exact_hash_problems(spark_pdf, oracle_pdf), d
+
+
+def _raises_naming(fn, path, timeout=120):
+    """Run ``fn`` in a thread: it must raise within ``timeout`` seconds,
+    with an error that names ``path``."""
+    import threading
+
+    out = []
+
+    def run():
+        try:
+            fn()
+        except Exception as e:  # noqa: BLE001
+            out.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout)
+    assert not t.is_alive(), f"hung on {path}"
+    assert out, f"no error for {path}"
+    assert path in str(out[0]), str(out[0])[:500]
+
+
+def test_load_table_names_the_path_it_cannot_read(spark, sf_dir, tmp_path):
+    """A missing table, an empty scale-factor directory and a truncated
+    ``events.parquet`` each give a prompt error naming the path, never
+    a hang or an answer."""
+    copy = _copy_sf(sf_dir, tmp_path)
+    os.remove(os.path.join(copy, "nation.parquet"))
+    _raises_naming(lambda: load_table(spark, copy, "nation"), os.path.join(copy, "nation.parquet"))
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    _raises_naming(lambda: load_table(spark, str(empty), "events"), str(empty / "events.parquet"))
+
+    events = os.path.join(copy, "events.parquet")
+    with open(events, "r+b") as f:
+        f.truncate(os.path.getsize(events) // 2)
+    _raises_naming(lambda: load_table(spark, copy, "events"), events)
+
+
+def test_read_memo_drops_a_file_truncated_after_it_was_read(spark, sf_dir, tmp_path):
+    """``load_table`` memoizes a resolved frame per stat key. Truncating
+    the file changes that key, so the next call must resolve the file
+    again, and fail on it, instead of returning the memoized frame;
+    the old frame's next action must fail too, not answer."""
+    copy = _copy_sf(sf_dir, tmp_path)
+    events = os.path.join(copy, "events.parquet")
+    df = load_table(spark, copy, "events")
+    assert df.count() > 0
+    assert load_table(spark, copy, "events") is df  # memo hit
+    with open(events, "r+b") as f:
+        f.truncate(os.path.getsize(events) // 2)
+    _raises_naming(lambda: load_table(spark, copy, "events"), events)  # a memo hit would not raise
+    _raises_naming(df.count, events)

@@ -20,7 +20,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
+from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH
 
 
 def _write_events_file(path: str, rows: list[tuple[int, datetime, float]], mtime: float) -> None:

@@ -158,7 +158,7 @@ def test_npz_writer_two_phase_commit_leaves_no_temps(spark, sf_dir):
     import os
 
     _Q["npz_datasource_write_roundtrip"].fn(spark, sf_dir).collect()
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.sources_multimodal import SCRATCH
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH
 
     tag = os.path.basename(sf_dir.rstrip("/"))
     out_dir = os.path.join(SCRATCH, f"npz_writer_{tag}")
