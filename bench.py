@@ -3,24 +3,39 @@
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Runs the corpus headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``. Each query is
-executed once warm-up-free except a tiny catalog-priming no-op; the
-per-query number is wall-clock of plan + execute + collect-to-driver
-(count only, results stay distributed).
+Runs the corpus headline queries at ``$SPARK_GRAFT_SF_DIR`` (default:
+the sf0.1 fixture directory) on ``local[$SPARK_GRAFT_CPUS]``, once each after
+a catalog and Python-worker warm-up that is not counted.  A query's
+number is the wall time of the repo benchmark's primitive
+(``perfbench/run.py``): its ``fn()`` call plus a full ``noop`` write of
+the result, so every column is computed.  Each run appends one record
+(commit, tree id of the measured code, host, per-query walls, total,
+conf) to ``BENCH_LEDGER.jsonl`` and never rewrites an earlier one; the
+printed line names the ledger.
 """
 
 from __future__ import annotations
 
+import datetime
+import importlib.util
 import json
 import os
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "perfbench"))
+
+import run as perfbench  # noqa: E402  (perfbench/run.py: the timing primitive's helpers)
 
 from high_energy_gamma_ray_search_in_kascade_array_data_spark import get_spark  # noqa: E402
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.registry import corpus  # noqa: E402
+
+_spec = importlib.util.spec_from_file_location("bench_ab", os.path.join(REPO, "scripts", "bench_ab.py"))
+bench_ab = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(bench_ab)
 
 # Headline set: the flagship physics query plus the heaviest relational /
 # text / vector queries — the ones whose plans matter at 100 TB.
@@ -136,119 +151,54 @@ HEADLINE = [
 ]
 
 
-def _calibrate() -> dict:
-    """Run-environment telemetry so cross-round comparisons can be
-    normalized: load average, cpu count, and a 1-s single-thread spin
-    constant (iterations of a fixed integer loop — lower = busier or
-    slower box). r7's driver bench ran 35% slower than the same code
-    on a quiet box; this makes that attribution measurable instead of
-    inferential."""
-    t0 = time.perf_counter()
-    it = 0
-    x = 0
-    while time.perf_counter() - t0 < 1.0:
-        for _ in range(10000):
-            x = (x * 1103515245 + 12345) % 2147483648
-        it += 10000
-    # Disk/page-cache read probe: the spin constant misses I/O stalls —
-    # two r11 diagnostic runs measured 2.3-2.6x total inflation with
-    # per-query movers FLIPPING between identical-code runs (pq_adc
-    # 0.65s->13.2s, image_phash 1.2s->34.9s) while spin said the box was
-    # FASTER than the committed close; the stall signature is bursty
-    # host I/O, so record a direct read-throughput sample too.
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    mb_per_s = None
-    probe = os.path.join(sf_dir, "lineitem.parquet")
+LEDGER = os.path.join(REPO, bench_ab.LEDGER)
+
+
+def git_state() -> dict:
+    """HEAD, the tree id of the code this run measured and whether that
+    differs from HEAD's; the ledger is left out of both trees
+    (``scripts/bench_ab.py::code_trees``)."""
     try:
-        n = 0
-        t0 = time.perf_counter()
-        with open(probe, "rb") as fh:
-            while n < (128 << 20):
-                chunk = fh.read(8 << 20)
-                if not chunk:
-                    break
-                n += len(chunk)
-        dt = time.perf_counter() - t0
-        mb_per_s = round((n / 1048576) / dt, 1) if dt > 0 else None
-    except OSError:
-        pass
-    la1, la5, la15 = os.getloadavg()
-    return {
-        "spin_iters_per_sec": it,
-        "read_mb_per_s": mb_per_s,
-        "loadavg_1m": round(la1, 2),
-        "loadavg_5m": round(la5, 2),
-        "cpus": os.cpu_count(),
-    }
+        head_tree, tree = bench_ab.code_trees(REPO)
+        return {"head": bench_ab.git("rev-parse", "HEAD", repo=REPO), "tree": tree, "dirty": tree != head_tree}
+    except (OSError, subprocess.CalledProcessError):
+        return {"head": None, "tree": None, "dirty": None}
 
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    calib = _calibrate()
     spark = get_spark("bench")
+    sc = spark.sparkContext
     reg = corpus()
     names = [n for n in HEADLINE if n in reg]
-    # prime: JVM + catalog warm (not counted)
-    reg[names[0]].fn(spark, sf_dir).limit(1).count()
-    # prime the Python worker pool too — one trivial Arrow batch per
-    # core, so the first pandas-UDF query isn't charged ~32 interpreter
-    # startups (a fixed cost a long-lived cluster pays once)
-    spark.range(spark.sparkContext.defaultParallelism * 4).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(lambda it: it, "id long").count()
+    # prime: JVM + catalog warm (not counted), and one Python worker per core
+    reg[names[0]].fn(spark, sf_dir).limit(1).write.format("noop").mode("overwrite").save()
+    perfbench.prime_workers(spark)
     timings: dict[str, float] = {}
-    t_total0 = time.time()
     for name in names:
-        t0 = time.time()
-        df = reg[name].fn(spark, sf_dir)
-        df.count()
-        timings[name] = round(time.time() - t0, 3)
+        sc.setJobGroup(f"bench:{name}", name)
+        t0 = time.perf_counter()
+        reg[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        timings[name] = round(time.perf_counter() - t0, 3)
         print(f"  {name}: {timings[name]}s", file=sys.stderr)
-    loop_wall = round(time.time() - t_total0, 3)
-    # Stall-outlier re-run (min-of-2, disclosed): the r11 adjudication
-    # measured multi-second bursty HOST stalls that hit a different
-    # random handful of queries on every run (pq_adc_topk 0.65s one
-    # run, 13.2s the next, identical code) — a single-pass wall makes
-    # the round headline hostage to which queries the stalls landed
-    # on. Any query whose wall exceeds both 5s and 4x the session
-    # median gets ONE re-run and keeps the min; every re-run is
-    # recorded (first, rerun) in the detail JSON so the suppression is
-    # auditable, and `value` becomes the sum of per-query walls (equal
-    # to the loop wall minus stall double-counting).
-    med = sorted(timings.values())[len(timings) // 2]
-    reruns: dict[str, list[float]] = {}
-    for name in [n for n, v in timings.items() if v > 5 and v > 4 * med]:
-        t0 = time.time()
-        reg[name].fn(spark, sf_dir).count()
-        again = round(time.time() - t0, 3)
-        reruns[name] = [timings[name], again]
-        timings[name] = min(timings[name], again)
-        print(f"  rerun {name}: {reruns[name][0]}s -> {again}s", file=sys.stderr)
     total = round(sum(timings.values()), 3)
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else None
-    # Full per-query map goes to a file: with ~70 headline queries the
-    # one-line JSON outgrew the driver's ~2 KB stdout tail capture
-    # (BENCH_r06.json came back parsed=null). The final printed line stays
-    # compact — total + the flagship and the slowest few — and points at
-    # the detail file.
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
-    with open(detail_path, "w") as fh:
-        json.dump(
-            {
-                "metric": "headline_queries_total_wall",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf,
-                "calib": calib,
-                "loop_wall": loop_wall,
-                "stall_reruns": reruns,
-            },
-            fh,
-            indent=1,
-        )
+    record = {
+        "ts": datetime.datetime.now(datetime.timezone.utc).isoformat(timespec="seconds"),
+        "git": git_state(),
+        "cpus": perfbench.cpus(),
+        "loadavg": [round(x, 2) for x in os.getloadavg()],
+        "sf": sf,
+        "sf_dir": sf_dir,
+        "action": "noop",
+        "queries": timings,
+        "total": total,
+        "conf": perfbench.conf_snapshot(spark),
+    }
+    with open(LEDGER, "a") as fh:
+        fh.write(json.dumps(record) + "\n")
+    # the full per-query map lives in the ledger: the printed line stays
+    # within a ~2 KB stdout tail (the flagship and the ten slowest)
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
     compact = {"survival_curve": timings.get("survival_curve")}
     compact.update(slowest)
@@ -261,8 +211,8 @@ def main() -> int:
                 "queries": {k: v for k, v in compact.items() if v is not None},
                 "n_queries": len(timings),
                 "sf": sf,
-                "calib": calib,
-                "detail": "BENCH_DETAIL.json",
+                "detail": os.path.basename(LEDGER),
+                "action": "noop",
             }
         )
     )

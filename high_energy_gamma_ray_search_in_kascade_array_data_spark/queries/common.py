@@ -9,10 +9,29 @@ mirror FIXTURES.md §A1 / SURVEY §1.1.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import load_table
+
+
+# Money sums in exact integer units (the ab_test_welch discipline).  A
+# price in whole cents times a fraction in whole percent points is an
+# exact BIGINT count of 1e-4 currency units; their SUM is rounded to
+# cents once, half up.  A rounded SUM of doubles instead depends on
+# summation order, which the two engines do not share, so a sum on a
+# half cent rounded differently (q10_returned_items, generated seed 17).
+def money_sum(price: Column, frac: Column) -> Column:
+    """SUM(price * frac) rounded to cents, as a double."""
+    units = F.sum(F.round(price * 100).cast("long") * F.round(frac * 100).cast("long")) + 50
+    # an exact multiple of 100 units over 10000: the same double as cents / 100
+    return (units - F.pmod(units, F.lit(100))) / 10000
+
+
+def money_sum_sql(price: str, frac: str) -> str:
+    """DuckDB twin of ``money_sum``."""
+    units = f"SUM(CAST(ROUND({price} * 100) AS BIGINT) * CAST(ROUND({frac} * 100) AS BIGINT))"
+    return f"CAST(({units} + 50) // 100 AS DOUBLE) / 100"
 
 
 def shower_frame(spark: SparkSession, sf_dir: str) -> DataFrame:

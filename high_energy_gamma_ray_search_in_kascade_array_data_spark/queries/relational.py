@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.common import money_sum, money_sum_sql
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.registry import register
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import load_table
 
@@ -20,11 +21,11 @@ from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog im
 @register(
     "q1_pricing_summary",
     survey_ref="A1,A4,P3",
-    oracle="""
+    oracle=f"""
 SELECT l_returnflag, l_linestatus,
        ROUND(SUM(l_quantity), 2) AS sum_qty,
        ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+       {money_sum_sql("l_extendedprice", "(1 - l_discount)")} AS sum_disc_price,
        ROUND(SUM(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
        ROUND(AVG(l_quantity), 6) AS avg_qty,
        ROUND(AVG(l_extendedprice), 4) AS avg_price,
@@ -46,7 +47,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
             F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
+            money_sum(F.col("l_extendedprice"), 1 - F.col("l_discount")).alias("sum_disc_price"),
             F.round(
                 F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax"))), 2
             ).alias("sum_charge"),
@@ -62,9 +63,9 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q3_shipping_priority",
     survey_ref="§2.7,§2.9",
-    oracle="""
+    oracle=f"""
 SELECT o_orderkey,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+       {money_sum_sql("l_extendedprice", "(1 - l_discount)")} AS revenue,
        CAST(o_orderdate AS DATE) AS orderdate
 FROM customer
 JOIN orders ON c_custkey = o_custkey
@@ -96,7 +97,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(bo, li.l_orderkey == F.col("o_orderkey"))
         .groupBy("o_orderkey", F.col("o_orderdate").cast("date").alias("orderdate"))
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
+        .agg(money_sum(F.col("l_extendedprice"), 1 - F.col("l_discount")).alias("revenue"))
         .select("o_orderkey", "revenue", "orderdate")
         .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
         .limit(10)
@@ -172,8 +173,8 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q6_forecast_revenue",
     survey_ref="P3,A4",
-    oracle="""
-SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue,
+    oracle=f"""
+SELECT {money_sum_sql("l_extendedprice", "l_discount")} AS revenue,
        CAST(COUNT(*) AS BIGINT) AS n
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
@@ -196,7 +197,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"),
+            money_sum(F.col("l_extendedprice"), F.col("l_discount")).alias("revenue"),
             F.count(F.lit(1)).alias("n"),
         )
     )

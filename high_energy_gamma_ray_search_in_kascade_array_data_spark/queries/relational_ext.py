@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.common import money_sum, money_sum_sql
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.registry import register
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import load_table
 
@@ -44,9 +45,9 @@ def q_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q10_returned_items",
     survey_ref="§2.7,§2.9",
-    oracle="""
+    oracle=f"""
 SELECT c.c_custkey, c.c_name,
-       ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
+       {money_sum_sql("l.l_extendedprice", "(1 - l.l_discount)")} AS revenue
 FROM customer c
 JOIN orders o ON o.o_custkey = c.c_custkey
 JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -58,7 +59,8 @@ LIMIT 20
 )
 def q_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 pattern: revenue lost to returned items, top 20
-    customers. Star join: lineitem drives, dims broadcast."""
+    customers. Star join: lineitem drives, dims broadcast; revenue is
+    summed in exact units (``common.money_sum``)."""
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
@@ -66,7 +68,7 @@ def q_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy("c_custkey", "c_name")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
+        .agg(money_sum(F.col("l_extendedprice"), 1 - F.col("l_discount")).alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
         .limit(20)
     )

@@ -1511,7 +1511,8 @@ def q_kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="M5:similarity,§2.5,§2.6",
     oracle="""
 WITH comps AS (
-  SELECT CASE WHEN vec_id < 250 THEN 'ref' ELSE 'cur' END AS cohort,
+  SELECT CASE WHEN 2 * vec_id <= (SELECT MIN(vec_id) + MAX(vec_id) FROM embeddings)
+              THEN 'ref' ELSE 'cur' END AS cohort,
          i AS dim,
          CAST(ROUND(CAST(embedding[i + 1] AS DOUBLE) * 1000000) AS BIGINT) AS v
   FROM embeddings, unnest(range(0, 64)) AS u(i)
@@ -1550,9 +1551,11 @@ LIMIT 10
 )
 def q_embedding_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-distribution drift monitor: split the corpus into a
-    reference and a current cohort (vec_id halves standing in for
-    last-week/this-week), compute the per-dimension two-sample z-score
-    of the mean from exact sufficient statistics, and report the 10
+    reference and a current cohort (the two halves of the vec_id range,
+    split at its midpoint, standing in for last-week/this-week; a
+    literal split id left one cohort empty on a smaller table), compute
+    the per-dimension two-sample z-score of the mean from exact
+    sufficient statistics, and report the 10
     most drifted dimensions — the alarm a retrieval deployment watches
     for encoder or upstream-data regressions.
 
@@ -1562,8 +1565,9 @@ def q_embedding_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     float math is row-local on exact BIGINTs (the ab_test_welch
     discipline applied per dimension)."""
     e = load_table(spark, sf_dir, "embeddings")
-    comps = e.select(
-        F.when(F.col("vec_id") < 250, "ref").otherwise("cur").alias("cohort"),
+    span = e.agg((F.min("vec_id") + F.max("vec_id")).alias("span"))
+    comps = e.crossJoin(F.broadcast(span)).select(
+        F.when(2 * F.col("vec_id") <= F.col("span"), "ref").otherwise("cur").alias("cohort"),
         F.posexplode(F.col("embedding")).alias("dim", "x"),
     ).select(
         "cohort",

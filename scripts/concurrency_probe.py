@@ -77,7 +77,9 @@ def main() -> int:
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.registry import corpus
 
     reg = corpus()
-    detail = json.load(open(os.path.join(REPO, "BENCH_DETAIL.json")))["queries"]
+    # the latest bench.py run's per-query walls
+    with open(os.path.join(REPO, "BENCH_LEDGER.jsonl")) as fh:
+        detail = json.loads(fh.read().splitlines()[-1])["queries"]
     # r11: streaming queries are INCLUDED — run_to_memory now scopes
     # each drain's in-memory sink name per invocation (uuid suffix), so
     # concurrent copies of the same streaming query no longer collide

@@ -1,15 +1,21 @@
 #!/usr/bin/env bash
-# Pre-snapshot gate: one command whose green output means what the
-# driver's CORRECTNESS gate means.
+# Pre-snapshot gate: one command whose green output means the tree is
+# correct under the exact-hash oracle and no slower than its reference
+# commit on the repo benchmark.
 #
 #   bash scripts/preflight.sh [sf_dir ...]
 #
-# Runs (1) the full pytest suite and (2) the DRIVER-GRADE (exact-hash,
-# signed-zero-sensitive) oracle sweep of every corpus query at each
-# given SF dir (default: sf0.001 and sf0.01; add sf0.1 before a round
-# snapshot — distribution-sensitive bugs live there, see SCALE.md).
-# Exits nonzero on the first failing stage. Snapshot commit messages
-# should cite the preflight run (VERDICT r3 "Next round" #6).
+# Runs (1) the registry-count consistency check of the docs, (2) the
+# interleaved perfbench A/B of the working tree against its reference
+# commit (scripts/bench_ab.py at 8 pairs, about 35 min on 4 cores: HEAD
+# when the tree differs from it, the ledger aside, else HEAD's parent;
+# fails past any BENCHMARK.json end-to-end bound or on a failed or
+# incorrect run; fewer pairs read same-code noise near the bounds),
+# (3) the full pytest suite and (4) the exact-hash, signed-zero-sensitive
+# oracle sweep of every corpus query at each given SF dir (default:
+# sf0.001 and sf0.01; add sf0.1 before a round snapshot —
+# distribution-sensitive bugs live there, see SCALE.md). Exits nonzero on the first failing stage.
+# Snapshot commit messages should cite the preflight run.
 set -u
 
 cd "$(dirname "$0")/.."
@@ -22,16 +28,8 @@ fi
 echo "== preflight: registry-count consistency (README/SCALE/COVERAGE/PLANS) =="
 python scripts/check_counts.py || { echo "PREFLIGHT FAIL: stale corpus count in docs"; exit 1; }
 
-echo "== preflight: calib-normalized bench regressions vs previous BENCH_DETAIL =="
-# STRICT since r11 (VERDICT r10 task 6): an unadjudicated >=1.5x
-# normalized per-query regression fails the close. To call one noise it
-# must first survive scripts/adjudicate_regression.py — 3x interleaved
-# solo re-runs vs the ref commit, verdict recorded in
-# BENCH_ADJUDICATION.json (committed, so the evidence ships).
-python scripts/check_bench_regression.py --strict || {
-  echo "PREFLIGHT FAIL: unadjudicated bench regression (see above)"
-  exit 1
-}
+echo "== preflight: perfbench A/B against the reference commit =="
+python scripts/bench_ab.py --pairs 8 || { echo "PREFLIGHT FAIL: bench A/B (see above)"; exit 1; }
 
 echo "== preflight: pytest =="
 python -m pytest tests/ -x -q || { echo "PREFLIGHT FAIL: pytest"; exit 1; }

@@ -294,3 +294,40 @@ def test_substring_dedup_abutting_coverage_merges(spark, tmp_path_factory):
     }
     assert clean[20]["n_removed"] == 16
     assert clean[20]["clean_text"] == "e1 e2 e3 e4 e5 e6"
+
+
+# Generated inputs (perfbench/gen.py) at seed 17: the fixtures' TPC-H
+# and events sizes, but only 200 documents and 200 embeddings.  Two
+# shapes failed here and in none of the fixture directories: a rounded
+# SUM of doubles, whose last cent depends on summation order, and a
+# cohort split at a literal id that leaves one cohort empty on a
+# smaller table.
+GEN_SEED = 17
+
+
+@pytest.fixture(scope="module")
+def generated_sf(tmp_path_factory):
+    import sys
+
+    bench = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
+    if bench not in sys.path:
+        sys.path.insert(0, bench)
+    import gen
+    from workloads import InputSpec
+
+    out = str(tmp_path_factory.mktemp(f"gen_s{GEN_SEED}") / "sf0.001")
+    gen.generate(out, GEN_SEED, InputSpec(sf=0.001, events=1000, events_files=1, documents=200, embeddings=200))
+    return out
+
+
+@pytest.mark.parametrize("name", ["q10_returned_items", "embedding_drift_report"])
+def test_query_matches_oracle_on_generated_inputs(name, spark, generated_sf):
+    q = _CORPUS[name]
+    spark_pdf = q.fn(spark, generated_sf).toPandas()
+    c = duckdb_con(generated_sf)
+    try:
+        oracle_pdf = c.execute(q.oracle).fetchdf()
+    finally:
+        c.close()
+    assert not compare_frames(spark_pdf, oracle_pdf), name
+    assert not exact_hash_problems(spark_pdf, oracle_pdf), name
