@@ -11,7 +11,7 @@ from pyspark.sql.types import DoubleType
 
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.common import SHOWER_CTE, shower_frame
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.registry import register
-from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import load_table, spread_scan
+from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import load_table, scratch_tag, spread_scan
 
 
 @register(
@@ -374,7 +374,7 @@ def q_ivf_partitioned_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame
     # SF-tagged: index content depends on sf_dir, and concurrent
     # harnesses at different SFs must not rebuild each other's index
     # mid-read (same class as the NPZ scratch collision)
-    index_path = os.path.join(SCRATCH, f"ivf_index_{os.path.basename(sf_dir.rstrip('/'))}")
+    index_path = os.path.join(SCRATCH, f"ivf_index_{scratch_tag(sf_dir)}")
     shutil.rmtree(index_path, ignore_errors=True)
     assigned.write.partitionBy("cell").parquet(index_path)
 

@@ -19,6 +19,7 @@ from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog im
     SCRATCH,
     derived_fixture,
     load_table,
+    scratch_tag,
     spread_scan,
 )
 
@@ -46,7 +47,7 @@ def _media_files(spark: SparkSession, sf_dir: str, mod: int, rem: int, encode, k
             with open(os.path.join(tmp, f"{e}.{ext}"), "wb") as f:
                 f.write(encode(e))
 
-    tag = os.path.basename(sf_dir.rstrip(chr(47)))
+    tag = scratch_tag(sf_dir)
     fix_dir = derived_fixture(
         os.path.join(SCRATCH, f"media_{kind.replace('/', '_')}_{tag}"),
         [os.path.join(sf_dir, "events.parquet")],
@@ -129,7 +130,7 @@ def q_partitioned_split_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = shower_frame(spark, sf_dir).withColumn(
         "split", F.when(rnd_col() < 0.8, F.lit("train")).otherwise(F.lit("test"))
     )
-    path = os.path.join(SCRATCH, f"split_sink_{os.path.basename(sf_dir.rstrip(chr(47)))}")
+    path = os.path.join(SCRATCH, f"split_sink_{scratch_tag(sf_dir)}")
     sink.write_partitioned(df.select("event_id", "label", "split"), path, ["split"])
     back = spark.read.parquet(path)
     return back.groupBy("split", "label").agg(F.count(F.lit(1)).alias("n"))
@@ -156,7 +157,7 @@ def q_npz_legacy_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(SCRATCH, exist_ok=True)
     # SF-tagged path: the archive content depends on sf_dir, and two
     # concurrent harnesses at different SFs must not clobber each other
-    path = os.path.join(SCRATCH, f"legacy_features_{os.path.basename(sf_dir.rstrip(chr(47)))}.npz")
+    path = os.path.join(SCRATCH, f"legacy_features_{scratch_tag(sf_dir)}.npz")
     pdf = shower_frame(spark, sf_dir).select("event_id", "lg_e", "ze").orderBy("event_id").toPandas()
     np.savez(path, features=pdf[["lg_e", "ze"]].to_numpy(dtype="float64"))
 
@@ -357,7 +358,7 @@ def q_orc_roundtrip_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import load_table
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-    path = os.path.join(SCRATCH, f"events_orc_{os.path.basename(sf_dir.rstrip(chr(47)))}")
+    path = os.path.join(SCRATCH, f"events_orc_{scratch_tag(sf_dir)}")
     shutil.rmtree(path, ignore_errors=True)
     ev.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
@@ -389,7 +390,7 @@ def q_npz_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.npz_datasource import NpzDataSource
 
     os.makedirs(SCRATCH, exist_ok=True)
-    path = os.path.join(SCRATCH, f"ds_features_{os.path.basename(sf_dir.rstrip(chr(47)))}.npz")
+    path = os.path.join(SCRATCH, f"ds_features_{scratch_tag(sf_dir)}.npz")
     pdf = shower_frame(spark, sf_dir).select("event_id", "lg_e", "ze").orderBy("event_id").toPandas()
     np.savez(path, features=pdf[["lg_e", "ze"]].to_numpy(dtype="float64"))
 
@@ -539,7 +540,7 @@ def q_jsonl_roundtrip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     os.makedirs(SCRATCH, exist_ok=True)
-    path = os.path.join(SCRATCH, f"jsonl_docs_{os.path.basename(sf_dir.rstrip(chr(47)))}")
+    path = os.path.join(SCRATCH, f"jsonl_docs_{scratch_tag(sf_dir)}")
     d.write.mode("overwrite").json(path)
     schema = StructType(
         [
@@ -588,7 +589,7 @@ def events_by_type_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .write.parquet(os.path.join(tmp, "dim"))
         )
 
-    tag = os.path.basename(sf_dir.rstrip(chr(47)))
+    tag = scratch_tag(sf_dir)
     path = derived_fixture(
         os.path.join(SCRATCH, f"events_by_type_{tag}"),
         [os.path.join(sf_dir, "events.parquet")],
@@ -713,7 +714,7 @@ def q_bucketed_join_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     table names and paths are SF-tagged."""
     import os
 
-    tag = os.path.basename(sf_dir.rstrip(chr(47))).replace(".", "_")
+    tag = scratch_tag(sf_dir)
     os.makedirs(SCRATCH, exist_ok=True)
     tables = {
         f"li_bucketed_{tag}": ("lineitem", "l_orderkey"),
@@ -774,7 +775,7 @@ def q_npz_datasource_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.npz_datasource import NpzDataSource
 
     spark.dataSource.register(NpzDataSource)
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
+    sf_tag = scratch_tag(sf_dir)
     out_dir = os.path.join(SCRATCH, f"npz_writer_{sf_tag}")
     shutil.rmtree(out_dir, ignore_errors=True)
 
@@ -957,9 +958,7 @@ def q_export_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     os.makedirs(SCRATCH, exist_ok=True)
-    path = os.path.join(
-        SCRATCH, f"training_shards_{os.path.basename(sf_dir.rstrip(chr(47)))}"
-    )
+    path = os.path.join(SCRATCH, f"training_shards_{scratch_tag(sf_dir)}")
     shard = (F.col("doc_id") % 8).alias("shard")
     (
         d.select("doc_id", "text", shard)
@@ -1044,7 +1043,7 @@ def q_xml_roundtrip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     reason XML stays an ingest edge and parquet the canonical store."""
     d = load_table(spark, sf_dir, "documents")
     os.makedirs(SCRATCH, exist_ok=True)
-    path = os.path.join(SCRATCH, f"xml_docs_{os.path.basename(sf_dir.rstrip(chr(47)))}")
+    path = os.path.join(SCRATCH, f"xml_docs_{scratch_tag(sf_dir)}")
     d.write.mode("overwrite").option("rowTag", "doc").format("xml").save(path)
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 

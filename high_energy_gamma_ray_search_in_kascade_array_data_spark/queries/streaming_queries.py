@@ -321,9 +321,9 @@ def q_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH, scratch_tag
 
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
+    sf_tag = scratch_tag(sf_dir)
     sink_path = os.path.join(SCRATCH, f"feb_sink_{sf_tag}")
     ckpt_path = os.path.join(SCRATCH, f"feb_ckpt_{sf_tag}")
     for p in (sink_path, ckpt_path):
@@ -539,6 +539,7 @@ def _late_replay_dir(spark: SparkSession, sf_dir: str) -> str:
         SCRATCH,
         derived_fixture,
         load_table,
+        scratch_tag,
     )
 
     def build(tmp: str) -> None:
@@ -565,7 +566,7 @@ def _late_replay_dir(spark: SparkSession, sf_dir: str) -> str:
             shutil.rmtree(part_dir)
             os.utime(dst, (1000 * (k + 1), 1000 * (k + 1)))
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
+    tag = scratch_tag(sf_dir)
     return derived_fixture(
         os.path.join(SCRATCH, f"late_replay2_{tag}"),
         [os.path.join(sf_dir, "events.parquet")],
@@ -761,10 +762,10 @@ def q_stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     import os
     import shutil
 
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH, scratch_tag
 
     replay = _late_replay_dir(spark, sf_dir)
-    tag = os.path.basename(sf_dir.rstrip("/"))
+    tag = scratch_tag(sf_dir)
     root = os.path.join(SCRATCH, f"upsert_sink_{tag}")
     shutil.rmtree(root, ignore_errors=True)
     os.makedirs(root)

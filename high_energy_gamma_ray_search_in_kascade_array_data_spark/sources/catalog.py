@@ -10,9 +10,11 @@ pruning for free, which the reference performed by hand
 
 from __future__ import annotations
 
+import fcntl
+import hashlib
 import os
+import re
 import shutil
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -106,7 +108,14 @@ def stat_key(path: str):
 # live here, beside the checkout, one entry per fixture and SF tag.
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
 
-_DERIVED_LOCK = threading.Lock()
+
+def scratch_tag(sf_dir: str) -> str:
+    """The tag that keys ``sf_dir``'s fixtures and saved tables: its
+    basename, as an identifier, plus a short hash of its realpath, so
+    two directories with the same name never share an entry."""
+    real = os.path.realpath(sf_dir)
+    name = re.sub(r"[^0-9A-Za-z_]", "_", os.path.basename(real))
+    return f"{name}_{hashlib.sha1(real.encode()).hexdigest()[:8]}"
 
 
 def derived_fixture(path: str, sources, version: int, build) -> str:
@@ -119,10 +128,14 @@ def derived_fixture(path: str, sources, version: int, build) -> str:
     then is the stamp written: a build that raises publishes nothing.
     A source with no stat key is rebuilt on every call, as the read
     memo never caches it; a fixture too big to list is stamped by
-    version and sources alone. One lock serializes concurrent drivers
-    sharing a fixture."""
+    version and sources alone. An exclusive ``flock`` on
+    ``<path>.lock`` around the check and the build serializes every
+    thread and process sharing the fixture, so concurrent misses
+    build it once."""
     stamp_path = path + ".stamp"
-    with _DERIVED_LOCK:
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path + ".lock", "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
         src = tuple((os.path.realpath(s), stat_key(s)) for s in sources)
 
         def stamp() -> str:

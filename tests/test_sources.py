@@ -476,10 +476,10 @@ def test_events_by_type_fixture_concurrent_build_race(spark, sf_dir, monkeypatch
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import (
         SCRATCH,
         derived_fixture,
+        scratch_tag,
     )
 
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"{SCRATCH}/events_by_type_{tag}"
+    path = f"{SCRATCH}/events_by_type_{scratch_tag(sf_dir)}"
     stamp = path + ".stamp"
     shutil.rmtree(path, ignore_errors=True)
     if os.path.exists(stamp):
@@ -534,44 +534,47 @@ def test_events_by_type_fixture_concurrent_build_race(spark, sf_dir, monkeypatch
     assert spark.read.parquet(fact).count() == n_fact
 
 
-def _copy_sf(sf_dir, tmp_path):
-    """A writable copy of the scale-factor directory under ``tmp_path``,
-    keeping its basename (the SF tag the derived fixtures are keyed by)."""
+@pytest.fixture
+def sf_copy(sf_dir, tmp_path):
+    """``sf_copy(sub)`` makes a writable copy of the scale-factor
+    directory at ``tmp_path/sub``, keeping its basename. The fixtures
+    and tables the test derives from each copy are removed from
+    ``.scratch`` afterwards: no later run uses the copy's tag."""
+    import glob
     import shutil
 
-    dst = tmp_path / os.path.basename(sf_dir.rstrip("/"))
-    dst.mkdir()
-    for name in os.listdir(sf_dir):
-        shutil.copyfile(os.path.join(sf_dir, name), dst / name)
-    return str(dst)
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH, scratch_tag
+
+    made = []
+
+    def copy(sub: str) -> str:
+        dst = tmp_path / sub / os.path.basename(sf_dir.rstrip("/"))
+        dst.mkdir(parents=True)
+        for name in os.listdir(sf_dir):
+            shutil.copyfile(os.path.join(sf_dir, name), dst / name)
+        made.append(str(dst))
+        return str(dst)
+
+    yield copy
+    for d in made:
+        for p in glob.glob(os.path.join(SCRATCH, f"*_{scratch_tag(d)}*")):
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+            else:
+                os.remove(p)
 
 
-FIXTURE_QUERIES = (
-    "partition_pruned_read",
-    "dynamic_partition_pruning_join",
-    "stream_late_data_accounting",
-    "stream_foreach_batch_upsert",
-)
-
-
-@pytest.mark.parametrize("name", FIXTURE_QUERIES)
-def test_fixture_queries_follow_a_rewritten_source(spark, sf_dir, tmp_path, name):
-    """A derived fixture must follow its source table, not just the SF
-    tag. The copy keeps every ``event_id`` (so id-only fingerprints
-    cannot tell it apart) but rotates ``event_type``, shifts ``ts`` and
-    scales ``value``. Run the query on the original, on the copy and on
-    the original again: each answer must equal its own DuckDB oracle."""
+def _rewrite_events(sf_dir):
+    """Rewrite ``events.parquet`` in place, keeping every ``event_id``
+    (so id-only fingerprints cannot tell it apart) but rotating
+    ``event_type``, shifting ``ts`` and scaling ``value``."""
     import datetime
 
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.registry import corpus
-    from tests.oracle_utils import compare_frames, duckdb_con, exact_hash_problems
-
-    copy = _copy_sf(sf_dir, tmp_path)
-    events = os.path.join(copy, "events.parquet")
+    events = os.path.join(sf_dir, "events.parquet")
     t = pq.read_table(events)
     types = sorted(set(t.column("event_type").to_pylist()))
     rotate = {a: types[(k + 1) % len(types)] for k, a in enumerate(types)}
@@ -584,16 +587,61 @@ def test_fixture_queries_follow_a_rewritten_source(spark, sf_dir, tmp_path, name
         t = t.set_column(t.schema.get_field_index(col), col, arr)
     pq.write_table(t, events)
 
+
+def _assert_oracle_exact(spark, name, d):
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.registry import corpus
+    from tests.oracle_utils import compare_frames, duckdb_con, exact_hash_problems
+
     q = corpus()[name]
-    for d in (sf_dir, copy, sf_dir):
-        spark_pdf = q.fn(spark, d).toPandas()
-        con = duckdb_con(d)
-        try:
-            oracle_pdf = con.execute(q.oracle).fetchdf()
-        finally:
-            con.close()
-        assert not compare_frames(spark_pdf, oracle_pdf), (d, compare_frames(spark_pdf, oracle_pdf))
-        assert not exact_hash_problems(spark_pdf, oracle_pdf), d
+    spark_pdf = q.fn(spark, d).toPandas()
+    con = duckdb_con(d)
+    try:
+        oracle_pdf = con.execute(q.oracle).fetchdf()
+    finally:
+        con.close()
+    assert not compare_frames(spark_pdf, oracle_pdf), (d, compare_frames(spark_pdf, oracle_pdf))
+    assert not exact_hash_problems(spark_pdf, oracle_pdf), d
+
+
+FIXTURE_QUERIES = (
+    "partition_pruned_read",
+    "dynamic_partition_pruning_join",
+    "stream_late_data_accounting",
+    "stream_foreach_batch_upsert",
+)
+
+
+@pytest.mark.parametrize("name", FIXTURE_QUERIES)
+def test_fixture_queries_follow_a_rewritten_source(spark, sf_copy, name):
+    """A derived fixture must follow its source table, not just the SF
+    tag. Run the query on a copy of the SF directory, then rewrite the
+    copy's events in place (same path, so the same tag; see
+    ``_rewrite_events``) and run it again: each answer must equal its
+    own DuckDB oracle."""
+    copy = sf_copy("copy")
+    _assert_oracle_exact(spark, name, copy)
+    _rewrite_events(copy)
+    _assert_oracle_exact(spark, name, copy)
+
+
+@pytest.mark.parametrize("name", ["bucketed_join_no_shuffle", "partition_pruned_read"])
+def test_same_named_sf_dirs_keep_their_own_fixtures(spark, sf_copy, name):
+    """Two SF directories with the same basename but different rows
+    (events rewritten, every line's price doubled) must each get their
+    own answer: the saved bucketed tables and the derived fixtures are
+    keyed by ``scratch_tag``, which hashes the realpath, not by the
+    basename alone."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    a, b = sf_copy("a"), sf_copy("b")
+    _rewrite_events(b)
+    lineitem = os.path.join(b, "lineitem.parquet")
+    t = pq.read_table(lineitem)
+    i = t.schema.get_field_index("l_extendedprice")
+    pq.write_table(t.set_column(i, "l_extendedprice", pc.multiply(t.column(i), 2)), lineitem)
+    for d in (a, b, a):
+        _assert_oracle_exact(spark, name, d)
 
 
 def _raises_naming(fn, path, timeout=120):
@@ -617,11 +665,11 @@ def _raises_naming(fn, path, timeout=120):
     assert path in str(out[0]), str(out[0])[:500]
 
 
-def test_load_table_names_the_path_it_cannot_read(spark, sf_dir, tmp_path):
+def test_load_table_names_the_path_it_cannot_read(spark, sf_copy, tmp_path):
     """A missing table, an empty scale-factor directory and a truncated
     ``events.parquet`` each give a prompt error naming the path, never
     a hang or an answer."""
-    copy = _copy_sf(sf_dir, tmp_path)
+    copy = sf_copy("copy")
     os.remove(os.path.join(copy, "nation.parquet"))
     _raises_naming(lambda: load_table(spark, copy, "nation"), os.path.join(copy, "nation.parquet"))
 
@@ -635,12 +683,12 @@ def test_load_table_names_the_path_it_cannot_read(spark, sf_dir, tmp_path):
     _raises_naming(lambda: load_table(spark, copy, "events"), events)
 
 
-def test_read_memo_drops_a_file_truncated_after_it_was_read(spark, sf_dir, tmp_path):
+def test_read_memo_drops_a_file_truncated_after_it_was_read(spark, sf_copy):
     """``load_table`` memoizes a resolved frame per stat key. Truncating
     the file changes that key, so the next call must resolve the file
     again, and fail on it, instead of returning the memoized frame;
     the old frame's next action must fail too, not answer."""
-    copy = _copy_sf(sf_dir, tmp_path)
+    copy = sf_copy("copy")
     events = os.path.join(copy, "events.parquet")
     df = load_table(spark, copy, "events")
     assert df.count() > 0

@@ -158,10 +158,9 @@ def test_npz_writer_two_phase_commit_leaves_no_temps(spark, sf_dir):
     import os
 
     _Q["npz_datasource_write_roundtrip"].fn(spark, sf_dir).collect()
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import SCRATCH, scratch_tag
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = os.path.join(SCRATCH, f"npz_writer_{tag}")
+    out_dir = os.path.join(SCRATCH, f"npz_writer_{scratch_tag(sf_dir)}")
     files = sorted(os.path.basename(p) for p in glob.glob(os.path.join(out_dir, "*")))
     assert files, "writer produced no shards"
     assert all(f.startswith("part-") and f.endswith(".npz") for f in files), files
