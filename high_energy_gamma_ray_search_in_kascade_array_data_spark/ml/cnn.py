@@ -157,8 +157,6 @@ def make_cnn_scorer_udf(artifact_path: str):
 
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.ml.inference import load_model_artifact
 
-    # explicit SCALAR eval type: the type-hint inference path does not
-    # accept multi-Series -> DataFrame (struct-returning) signatures
     def score(feats, edep, muons):
         if len(feats) == 0:
             return pd.DataFrame({"logit": [], "sigmoid": []})
@@ -174,9 +172,7 @@ def make_cnn_scorer_udf(artifact_path: str):
         logit = cnn_forward(state, fmat, g)
         return pd.DataFrame({"logit": logit, "sigmoid": 1.0 / (1.0 + np.exp(-logit))})
 
-    from pyspark.sql.functions import PandasUDFType
-
-    return F.pandas_udf("logit double, sigmoid double", PandasUDFType.SCALAR)(score)
+    return F.pandas_udf(score, "logit double, sigmoid double")
 
 
 # ------------------------------------------------------- DuckDB oracle

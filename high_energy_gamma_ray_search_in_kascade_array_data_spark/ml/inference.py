@@ -21,7 +21,6 @@ from collections.abc import Sequence
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
@@ -153,17 +152,6 @@ def mlp_score_sql(state: dict, feature_exprs: Sequence[str]) -> str:
             nxt.append(acc if li == n_layers else f"GREATEST({acc}, 0.0)")
         exprs = nxt
     return f"1.0 / (1.0 + EXP(-({exprs[0]})))"
-
-
-def linear_score_expr(feature_cols: Sequence[str], weights: Sequence[float], bias: float) -> Column:
-    """The same σ(w·x + b) as a pure column expression (JVM-side,
-    whole-stage codegen) — the preferred form when the "model" is
-    linear; the pandas_udf twin exists to exercise and test the Arrow
-    seam a real neural model needs."""
-    z = F.lit(float(bias))
-    for c, wi in zip(feature_cols, weights):
-        z = z + F.col(c) * F.lit(float(wi))
-    return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
 
 
 def sigmoid(x: float) -> float:

@@ -1,5 +1,6 @@
 """End-to-end pipelines mirroring the reference's three entry points
-(SURVEY §3) as single lazy DataFrame DAGs.
+(SURVEY §3) as single lazy DataFrame DAGs, and the one implementation
+of each step of its chain that the flagship queries compose.
 
   * :func:`prepare_datasets`  — entry point 3.1
     (``create_train_valid_test_datasets.py:113-164``): stratified
@@ -7,9 +8,8 @@
     direction-cosine features → partitioned persistence.
   * :func:`analysis_pipeline` — the analytical spine of entry points
     3.2/3.3 (``train_classification.py:264-312``,
-    ``evaluate_classification.py:94-134``): scaler fit on train /
-    apply everywhere → (stand-in) model score → band filter →
-    survival curve.
+    ``evaluate_classification.py:94-134``): (stand-in) model score →
+    band filter → survival curve.
 
 Where the reference materializes eagerly after every step, each
 pipeline here is ONE logical plan: Catalyst fuses the projections,
@@ -23,50 +23,62 @@ re-sort and re-rank the input.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.functions import physics
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators.survival import survival_curve
 
 
-def stratified_split_assign(
-    df: DataFrame,
-    label_col: str = "label",
-    rnd: F.Column | None = None,
-    fractions: tuple[float, float] = (0.6, 0.8),
-) -> DataFrame:
-    """Exact stratified split assignment (X1): percent_rank over a
-    seeded draw within each class, projected once (so the ``Window``
-    computes it once) and bucketed at the cumulative fractions."""
-    if rnd is None:
-        rnd = F.rand(42)
-    w = Window.partitionBy(label_col).orderBy(rnd.asc(), F.col("event_id").asc())
+def band_cut(e_band: tuple[float, float] = (15.0, 16.0)) -> Column:
+    """The analysis band: zenith ∈ [0, 30)° and lg_e ∈ ``e_band``. The
+    training analysis uses lg_e ∈ [15,16) and the held-out evaluation
+    lg_e ∈ [14,15) (`train_classification.py:289` vs
+    `evaluate_classification.py:111`) — same plan, different band."""
+    return (
+        (F.col("ze") >= 0) & (F.col("ze") < 30) & (F.col("lg_e") >= e_band[0]) & (F.col("lg_e") < e_band[1])
+    )
+
+
+def stratified_split_assign(df: DataFrame, rnd: F.Column) -> DataFrame:
+    """Exact stratified split assignment (X1): percent_rank over the
+    seeded draw ``rnd`` within each class, projected once (so the
+    ``Window`` computes it once) and bucketed at 0.6/0.8."""
+    w = Window.partitionBy("label").orderBy(rnd.asc(), F.col("event_id").asc())
     pr = F.col("_pr")
     return df.withColumn("_pr", F.percent_rank().over(w)).withColumn(
         "split",
-        F.when(pr < fractions[0], F.lit("train"))
-        .when(pr < fractions[1], F.lit("valid"))
-        .otherwise(F.lit("test")),
+        F.when(pr < 0.6, F.lit("train")).when(pr < 0.8, F.lit("valid")).otherwise(F.lit("test")),
     ).drop("_pr")
 
 
-def augment_rotations(
-    df: DataFrame, fraction: float, draw: F.Column, k_values: tuple[int, ...] = (1, 2, 3), *,
-    eligible: F.Column,
+def rotate_shower(k: int) -> dict[str, Column]:
+    """Azimuth and shower core after k 90° grid rotations."""
+    cx, cy = physics.rotate_core(F.col("core_x"), F.col("core_y"), k)
+    return {"az": physics.rotate_azimuth(F.col("az"), k), "core_x": cx, "core_y": cy}
+
+
+def expand_rotations(
+    df: DataFrame,
+    rotate: Callable[[int], dict[str, Column]],
+    keep: Callable[[int], Column] | None = None,
 ) -> DataFrame:
-    """Sample-then-rotate augmentation (X2 + T2 + T4) as one ``Generate``:
-    each row keeps k=0, and an ``eligible`` row also yields rotation k
-    when the deterministic ``(draw + 0.1·k) % 1 < fraction``, rotated in
-    closed form under a ``CASE`` on the ``k`` column it adds."""
+    """90° rotation expansion (T2 + T4, and X2 with ``keep``) as one
+    ``Generate``: each row keeps k=0 and yields every k ∈ {1, 2, 3}
+    that ``keep(k)`` admits (all of them without ``keep``), in the
+    ``k`` column it adds; the columns ``rotate(k)`` names are then
+    rewritten in closed form under one ``CASE`` on k."""
     k = F.col("k")
-    kept = [F.when(eligible & ((draw + F.lit(j) * 0.1) % 1 < fraction), F.lit(j)) for j in k_values]
+    ks = (1, 2, 3)
+    kept = [F.lit(j) if keep is None else F.when(keep(j), F.lit(j)) for j in ks]
     out = df.withColumn("k", F.explode(F.array(F.lit(0), *kept))).filter(k.isNotNull())
-    az, cx, cy = F.col("az"), F.col("core_x"), F.col("core_y")
-    cases = dict.fromkeys(("az", "core_x", "core_y"), F)  # F.when opens a CASE, Column.when extends it
-    for j in k_values:
-        rotated = (physics.rotate_azimuth(az, j), *physics.rotate_core(cx, cy, j))
-        cases = {c: cases[c].when(k == j, r) for c, r in zip(cases, rotated)}
+    cases = None
+    for j in ks:
+        rotated = rotate(j)
+        cases = cases or dict.fromkeys(rotated, F)  # F.when opens a CASE, Column.when extends it
+        cases = {c: cases[c].when(k == j, r) for c, r in rotated.items()}
     return out.withColumns({c: case.otherwise(F.col(c)) for c, case in cases.items()})
 
 
@@ -83,7 +95,9 @@ def prepare_datasets(
     augment_fraction: float = 0.3,
 ) -> DataFrame:
     """Entry point 3.1 as one DAG: one split ``Window``, then one
-    rotation ``Generate`` that augments train rows only. ``rnd`` drives
+    rotation ``Generate`` that augments train rows only: rotation k of
+    a train row is kept when the deterministic
+    ``(aug_draw + 0.1·k) % 1 < augment_fraction``. ``rnd`` drives
     the split and ``aug_draw`` the augmentation sampling — they MUST be
     independent draws: the split conditions train membership on rnd
     (train = the lowest fractions), so reusing it for sampling would
@@ -91,9 +105,12 @@ def prepare_datasets(
     independent draws, ``create_train_valid_test_datasets.py:78-80``).
     Tests use two different integer hashes so the DuckDB oracle replays
     both."""
-    split = stratified_split_assign(shower, rnd=rnd)
+    split = stratified_split_assign(shower, rnd)
     train = F.col("split") == "train"
-    return add_direction_features(augment_rotations(split, augment_fraction, aug_draw, eligible=train))
+    augmented = expand_rotations(
+        split, rotate_shower, keep=lambda j: train & ((aug_draw + F.lit(j) * 0.1) % 1 < augment_fraction)
+    )
+    return add_direction_features(augmented)
 
 
 def analysis_pipeline(
@@ -103,21 +120,12 @@ def analysis_pipeline(
     nbins: int = 100,
     e_band: tuple[float, float] = (15.0, 16.0),
 ) -> DataFrame:
-    """Entry points 3.2/3.3 analytical spine as one DAG:
+    """Entry points 3.2/3.3 analytical spine as one DAG over one scan:
 
-    scaler fit on the train subset (broadcast 1-row params) → apply →
     stand-in model score → energy/zenith band filter → survival curve.
+    Standardization is its own step (``scaler_fit`` / ``scaler_apply``);
+    the stand-in score reads the raw features, so none is fitted here.
     """
-    train = shower.filter(F.col("split") == "train") if "split" in shower.columns else shower
-    params = train.agg(
-        F.avg("lg_e").alias("mu_e"),
-        F.stddev_pop("lg_e").alias("sd_e"),
-        F.min("p").alias("p_lo"),
-        F.max("p").alias("p_hi"),
-    )
-    scaled = shower.crossJoin(F.broadcast(params)).withColumn(
-        "lg_e_std", physics.standardize(F.col("lg_e"), F.col("mu_e"), F.col("sd_e"))
-    )
     w = score_weights
     z = (
         F.lit(score_bias)
@@ -126,14 +134,6 @@ def analysis_pipeline(
         + F.col("p") * w[2]
         + F.col("core_x") * w[3]
     )
-    scored = scaled.withColumn("score", F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))
-    # the training analysis uses lg_e ∈ [15,16) and the held-out
-    # evaluation lg_e ∈ [14,15) (`train_classification.py:289` vs
-    # `evaluate_classification.py:111`) — same plan, different band
-    band = scored.filter(
-        (F.col("ze") >= 0)
-        & (F.col("ze") < 30)
-        & (F.col("lg_e") >= e_band[0])
-        & (F.col("lg_e") < e_band[1])
-    )
-    return survival_curve(band, label_col="label", prob_col="score", nbins=nbins)
+    scored = shower.withColumn("score", F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))
+    curve = survival_curve(scored.filter(band_cut(e_band)), label_col="label", prob_col="score", nbins=nbins)
+    return curve.drop("bin_count")

@@ -222,48 +222,6 @@ def synth_bmp_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def synth_jpeg_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Genuine 16×16 grayscale baseline JPEG files, one per event.
-
-    JPEG payloads cannot be assembled plan-side (Huffman coding is not
-    expressible as column algebra), so synthesis is an Arrow kernel —
-    the ingest seam itself.  The coefficient recipe depends only on
-    ``event_id % 64`` (``operators/jpeg.py::fixture_coeffs``), so the
-    kernel memoizes the 64 encoded variants per worker: synthesis cost
-    is O(64) encodes per executor, payload attach is a dict lookup —
-    the downstream DECODE still parses every row's container for real,
-    which is the operation under test."""
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators.jpeg import fixture_jpeg
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import load_table, spread_scan
-
-    ev = (
-        spread_scan(load_table(spark, sf_dir, "events").select("event_id"))
-    )
-
-    def attach(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[int, bytes] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for eid in pdf["event_id"]:
-                kk = int(eid) % 64
-                if kk not in cache:
-                    cache[kk] = fixture_jpeg(kk)
-                payloads.append(cache[kk])
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["event_id"].to_numpy(),
-                    "kind": "image/jpeg",
-                    "payload": payloads,
-                    "width": 16,
-                    "height": 16,
-                }
-            )
-
-    return ev.mapInPandas(attach, MEDIA_SCHEMA)
-
-
 def synth_and_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fused synth→decode JPEG pipeline in ONE Arrow kernel (guide
     §4.1/§8): the former two chained ``mapInPandas`` stages shipped

@@ -39,10 +39,18 @@ def survival_curve(df: DataFrame, label_col: str = "label", prob_col: str = "p",
     """Per-class empirical CDF of ``prob_col`` (survival curve).
 
     Input: one row per event with a class label and a score in [0, 1].
-    Output: (label, bin, cum_count, class_total, surviving_frac),
-    monotone nondecreasing in ``bin`` and terminating at 1.0 per class.
+    Output: (label, bin, bin_count, cum_count, class_total,
+    surviving_frac), monotone nondecreasing in ``bin`` and terminating
+    at 1.0 per class.
     """
-    hist = histogram(df, prob_col, nbins, by=[label_col])
+    return survival_from_histogram(histogram(df, prob_col, nbins, by=[label_col]), label_col)
+
+
+def survival_from_histogram(hist: DataFrame, label_col: str = "label") -> DataFrame:
+    """Stages 2–3 on a relation already binned to (label, bin,
+    bin_count) — the output of :func:`histogram`, or a histogram a
+    stream keeps up to date. Each window sum is projected once and the
+    fraction reads the projected columns."""
     w_cum = Window.partitionBy(label_col).orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
     w_all = Window.partitionBy(label_col)
     return (
@@ -51,5 +59,5 @@ def survival_curve(df: DataFrame, label_col: str = "label", prob_col: str = "p",
         # exact single IEEE division of two integers — bit-identical in
         # any engine, no rounding needed
         .withColumn("surviving_frac", F.col("cum_count").cast("double") / F.col("class_total"))
-        .select(label_col, "bin", "cum_count", "class_total", "surviving_frac")
+        .select(label_col, "bin", "bin_count", "cum_count", "class_total", "surviving_frac")
     )

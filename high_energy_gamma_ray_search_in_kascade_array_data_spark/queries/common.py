@@ -34,13 +34,14 @@ def money_sum_sql(price: str, frac: str) -> str:
     return f"CAST(({units} + 50) // 100 AS DOUBLE) / 100"
 
 
-def shower_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic shower-event relation derived from ``events``:
-    label 0=gamma/1=proton, lg_e ∈ [14,16.5), ze ∈ [0,45), az ∈ [0,360),
-    classifier score p ∈ [0,1), core position ∈ [−16,16]."""
-    ev = load_table(spark, sf_dir, "events")
+def shower(df: DataFrame, *extra: str | Column) -> DataFrame:
+    """Deterministic shower-event columns derived from ``df``'s
+    ``event_id`` — the events table, the events stream or scored rows:
+    label 0=gamma/1=proton, lg_e ∈ [14,16.5), ze ∈ [0,45),
+    az ∈ [0,360), classifier score p ∈ [0,1), core position ∈ [−16,16];
+    then ``extra``."""
     eid = F.col("event_id")
-    return ev.select(
+    return df.select(
         eid,
         (eid % 2).cast("int").alias("label"),
         (F.lit(14.0) + (eid * 131 % 2500) / F.lit(1000.0)).alias("lg_e"),
@@ -49,11 +50,17 @@ def shower_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((eid * 37 % 1000) / F.lit(1000.0)).alias("p"),
         ((eid * 13 % 33).cast("double") - 16).alias("core_x"),
         ((eid * 19 % 33).cast("double") - 16).alias("core_y"),
-        F.col("value"),
+        *extra,
     )
 
 
-# DuckDB twin of shower_frame — keep in lockstep with the above.
+def shower_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The shower relation (:func:`shower`) of the ``events`` table,
+    keeping its ``value``."""
+    return shower(load_table(spark, sf_dir, "events"), "value")
+
+
+# DuckDB twin of shower_frame — keep in lockstep with shower().
 SHOWER_CTE = """
 shower AS (
   SELECT event_id,

@@ -12,6 +12,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.functions import physics
+from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators.etl import (
+    band_cut,
+    expand_rotations,
+    rotate_shower,
+    stratified_split_assign,
+)
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators.survival import histogram, survival_curve
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.common import (
     GRID_CTE,
@@ -54,16 +60,9 @@ def q_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction below each score threshold), the reference's scientific
     payoff (`train_classification.py:284-312`). Band filter P3 →
     histogram A5 → cumulative window A6 → normalize A9."""
-    band = shower_frame(spark, sf_dir).filter(
-        (F.col("ze") >= 0) & (F.col("ze") < 30) & (F.col("lg_e") >= 15) & (F.col("lg_e") < 16)
-    )
-    curve = survival_curve(band, label_col="label", prob_col="p", nbins=100)
-    # keep bin_count in the output so the histogram itself is checked
-    hist = histogram(band, "p", 100, by=["label"])
-    return (
-        hist.join(curve, ["label", "bin"])
-        .select("label", "bin", "bin_count", "cum_count", "class_total", "surviving_frac")
-    )
+    band = shower_frame(spark, sf_dir).filter(band_cut())
+    # bin_count stays in the output so the histogram itself is checked
+    return survival_curve(band, label_col="label", prob_col="p", nbins=100)
 
 
 @register(
@@ -96,9 +95,7 @@ def q_survival_curve_10k(spark: SparkSession, sf_dir: str) -> DataFrame:
     still bounded by bins × classes (≤ 20 000 rows) regardless of
     event count, which is WHY a 10 000-bin histogram is free at
     100 TB."""
-    band = shower_frame(spark, sf_dir).filter(
-        (F.col("ze") >= 0) & (F.col("ze") < 30) & (F.col("lg_e") >= 15) & (F.col("lg_e") < 16)
-    )
+    band = shower_frame(spark, sf_dir).filter(band_cut())
     curve = survival_curve(band, label_col="label", prob_col="p", nbins=10000)
     return curve.select("label", "bin", "cum_count", "class_total")
 
@@ -136,11 +133,7 @@ def q_band_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conjunctive range filter + column-subset projection
     (`train_classification.py:288-293`, `:209-216`). Catalyst pushes
     both into the parquet scan."""
-    return (
-        shower_frame(spark, sf_dir)
-        .filter((F.col("ze") >= 0) & (F.col("ze") < 30) & (F.col("lg_e") >= 15) & (F.col("lg_e") < 16))
-        .select("event_id", "lg_e", "ze", "p")
-    )
+    return shower_frame(spark, sf_dir).filter(band_cut()).select("event_id", "lg_e", "ze", "p")
 
 
 # --------------------------------------------------------- trig functions
@@ -245,23 +238,9 @@ def q_spherical_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------- 90° rotations
-def _rotations_union(grid: DataFrame, ks: list[int]) -> DataFrame:
-    parts = []
-    for k in ks:
-        rx, ry = physics.rotate_grid_index(F.col("ix"), F.col("iy"), k)
-        parts.append(
-            grid.select(
-                F.lit(k).cast("int").alias("k"),
-                "event_id",
-                rx.alias("ix"),
-                ry.alias("iy"),
-                "edep",
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+def _rotate_grid(k: int) -> dict[str, F.Column]:
+    ix, iy = physics.rotate_grid_index(F.col("ix"), F.col("iy"), k)
+    return {"ix": ix, "iy": iy}
 
 
 @register(
@@ -278,8 +257,9 @@ UNION ALL SELECT 3 AS k, event_id, iy AS ix, 15 - ix AS iy, edep FROM grid
 def q_rotate_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """np.rot90 on the long-form detector grid
     (`create_train_valid_test_datasets.py:72-74`): each rotation is a
-    pure projection (no shuffle), stacked with UNION ALL (T4)."""
-    return _rotations_union(detector_grid(spark, sf_dir), [0, 1, 2, 3])
+    pure projection (no shuffle); the four copies of a row come from one
+    ``explode`` over one grid scan (T4), rotated under a ``CASE`` on k."""
+    return expand_rotations(detector_grid(spark, sf_dir), _rotate_grid).select("k", "event_id", "ix", "iy", "edep")
 
 
 @register(
@@ -298,28 +278,18 @@ def q_rotate_azimuth_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event feature rotation (`rotate_x_y_Az`,
     `create_train_valid_test_datasets.py:57-68`): azimuth + 90°k with
     wraparound, core-coordinate sign flips — composed column
-    expressions, no apply_along_axis loop."""
-    df = shower_frame(spark, sf_dir)
-    parts = []
-    for k in range(4):
-        az_rot = physics.rotate_azimuth(F.col("az"), k)
-        cx, cy = physics.rotate_core(F.col("core_x"), F.col("core_y"), k)
-        parts.append(
-            df.select(
-                "event_id",
-                F.lit(k).cast("int").alias("k"),
-                az_rot.alias("az_rot"),
-                # + 0.0: negating a 0.0 core coordinate yields -0.0;
-                # deterministic per-row on both engines, but normalized
-                # to keep the corpus free of signed zeros entirely
-                (cx + F.lit(0.0)).alias("core_x_rot"),
-                (cy + F.lit(0.0)).alias("core_y_rot"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    expressions under one ``explode``, no apply_along_axis loop."""
+    # the shower's az lies in [0, 360), so k=0 needs no wrap
+    return expand_rotations(shower_frame(spark, sf_dir), rotate_shower).select(
+        "event_id",
+        "k",
+        F.col("az").alias("az_rot"),
+        # + 0.0: negating a 0.0 core coordinate yields -0.0;
+        # deterministic per-row on both engines, but normalized
+        # to keep the corpus free of signed zeros entirely
+        (F.col("core_x") + F.lit(0.0)).alias("core_x_rot"),
+        (F.col("core_y") + F.lit(0.0)).alias("core_y_rot"),
+    )
 
 
 @register(
@@ -349,19 +319,11 @@ def q_augment_rotations(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic multiplicative-hash draw so the oracle reproduces the
     sample exactly. The kept copies of a row come from one ``explode``
     over one grid scan, and ix/iy are rotated under a ``CASE`` on k."""
-    grid = detector_grid(spark, sf_dir)
-    k, ix, iy = F.col("k"), F.col("ix"), F.col("iy")
-    kept = [F.lit(0)]
-    rx, ry = F, F  # F.when opens a CASE, Column.when extends it
-    for j in (1, 2, 3):
+    def keep(j: int) -> F.Column:
         draw = (F.col("event_id") % 2147483648) * (2654435761 + j) % 4294967296 / F.lit(4294967296.0)
-        kept.append(F.when(draw < 0.3, F.lit(j)))
-        jx, jy = physics.rotate_grid_index(ix, iy, j)
-        rx, ry = rx.when(k == j, jx), ry.when(k == j, jy)
-    aug = grid.select("event_id", F.explode(F.array(*kept)).alias("k"), "ix", "iy", "edep")
-    aug = aug.filter(k.isNotNull()).select(
-        k, "event_id", rx.otherwise(ix).alias("ix"), ry.otherwise(iy).alias("iy"), "edep"
-    )
+        return draw < 0.3
+
+    aug = expand_rotations(detector_grid(spark, sf_dir), _rotate_grid, keep)
     return aug.groupBy("k").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.round(F.sum(F.col("edep") * (F.col("iy") * 16 + F.col("ix"))), 4).alias("checksum"),
@@ -488,16 +450,7 @@ def q_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     a seeded deterministic draw within each class, bucketed at
     0.6/0.8 — exact per-class proportions, unlike sampleBy. One shuffle
     on the class key; at scale the window runs per-class-partition."""
-    df = shower_frame(spark, sf_dir)
-    w = Window.partitionBy("label").orderBy(rnd_col().asc(), F.col("event_id").asc())
-    pr = F.col("pr")
-    assigned = df.select("label", F.percent_rank().over(w).alias("pr")).select(
-        "label",
-        F.when(pr < 0.6, F.lit("train"))
-        .when(pr < 0.8, F.lit("valid"))
-        .otherwise(F.lit("test"))
-        .alias("split"),
-    )
+    assigned = stratified_split_assign(shower_frame(spark, sf_dir), rnd_col())
     return assigned.groupBy("label", "split").agg(F.count(F.lit(1)).alias("n"))
 
 

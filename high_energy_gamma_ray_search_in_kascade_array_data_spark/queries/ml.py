@@ -9,7 +9,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.ml import cnn, inference, pipeline
-from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.common import SHOWER_CTE, shower_frame
+from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators.etl import band_cut
+from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators.survival import survival_curve
+from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.common import SHOWER_CTE, shower, shower_frame
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.registry import register
 
 # Fixed stand-in "model": σ(w·x + b) over four shower observables.
@@ -239,21 +241,10 @@ def q_cnn_pipeline_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     leave the cluster. The DuckDB oracle extends the SAME relational
     network forward with the survival composition, so the end-to-end
     physics result (not just the scores) is hash-checked."""
-    scored = _cnn_scored_frame(spark, sf_dir)
-    eid = F.col("event_id")
-    enriched = scored.select(
-        (eid % 2).cast("int").alias("label"),
-        (F.lit(14.0) + (eid * 131 % 2500) / F.lit(1000.0)).alias("lg_e"),
-        (eid * 17 % 45).cast("double").alias("ze"),
-        F.round(F.col("sigmoid"), 6).alias("score"),
-    )
-    band = enriched.filter(
-        (F.col("ze") >= 0) & (F.col("ze") < 30) & (F.col("lg_e") >= 14) & (F.col("lg_e") < 16)
-    )
+    scored = shower(_cnn_scored_frame(spark, sf_dir), F.round(F.col("sigmoid"), 6).alias("score"))
+    band = scored.filter(band_cut((14.0, 16.0)))
     # compose the flagship operator, don't reimplement it: width
     # 1.0/20 == 0.05 exactly, so the binning matches the oracle
-    from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators.survival import survival_curve
-
     curve = survival_curve(band, label_col="label", prob_col="score", nbins=20)
     return curve.select(
         "label",

@@ -1,8 +1,8 @@
 """End-to-end pipeline corpus (SURVEY §3): the reference's entry
 points as single DAGs, checksummed per (split, k) so the WHOLE flow —
 split assignment, sampled rotation augmentation, feature derivation,
-scaling, scoring, banding, survival — is differential-tested, not just
-its pieces."""
+scoring, banding, survival — is differential-tested, not just its
+pieces."""
 
 from __future__ import annotations
 
@@ -92,9 +92,9 @@ FROM binned
 )
 def q_analysis_pipeline_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entry point 3.2 analytical spine end-to-end
-    (`train_classification.py:264-312`): scaler-fit broadcast →
-    stand-in model score → band filter → survival curve, one DAG —
-    the full scientific workflow a reference user runs."""
+    (`train_classification.py:264-312`): stand-in model score → band
+    filter → survival curve, one DAG over one scan — the full
+    scientific workflow a reference user runs."""
     shower = shower_frame(spark, sf_dir)
     return etl.analysis_pipeline(shower)
 

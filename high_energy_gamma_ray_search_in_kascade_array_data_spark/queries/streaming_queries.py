@@ -10,6 +10,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators.etl import band_cut
+from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators.survival import histogram, survival_from_histogram
+from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.common import shower
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.text import (
     SUBSTR_GRAM_CTE,
     gram_project,
@@ -73,7 +76,8 @@ def q_stream_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagship's A5 stage: state bounded by nbins, replay-equivalent to
     the batch histogram."""
     ev = core.read_events_stream(spark, sf_dir)
-    sink_tbl = core.run_to_memory(core.value_histogram(ev), "stream_value_histogram_sink", state_partitions=8)
+    hist = histogram(ev, "value", nbins=40, lo=0.0, hi=400.0)
+    sink_tbl = core.run_to_memory(hist, "stream_value_histogram_sink", state_partitions=8)
     return spark.table(sink_tbl)
 
 
@@ -378,39 +382,10 @@ def q_stream_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the unbounded event stream never re-scans; the curve refresh costs
     O(nbins), not O(events). Must equal the batch survival_curve —
     same oracle."""
-    from pyspark.sql import Window
-
-    ev = core.read_events_stream(spark, sf_dir)
-    eid = F.col("event_id")
-    shower = ev.select(
-        (eid % 2).cast("int").alias("label"),
-        (F.lit(14.0) + (eid * 131 % 2500) / F.lit(1000.0)).alias("lg_e"),
-        (eid * 17 % 45).cast("double").alias("ze"),
-        ((eid * 37 % 1000) / F.lit(1000.0)).alias("p"),
-    )
-    band = shower.filter(
-        (F.col("ze") >= 0) & (F.col("ze") < 30) & (F.col("lg_e") >= 15) & (F.col("lg_e") < 16)
-    )
-    binned = band.groupBy(
-        "label",
-        F.least(F.floor(F.col("p") / 0.01), F.lit(99)).cast("int").alias("bin"),
-    ).agg(F.count(F.lit(1)).alias("bin_count"))
-    sink_tbl = core.run_to_memory(binned, "stream_survival_sink", state_partitions=8)
-    hist = spark.table(sink_tbl)
-    w_cum = (
-        Window.partitionBy("label").orderBy("bin").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_tot = Window.partitionBy("label")
-    return hist.select(
-        "label",
-        "bin",
-        "bin_count",
-        F.sum("bin_count").over(w_cum).alias("cum_count"),
-        F.sum("bin_count").over(w_tot).alias("class_total"),
-        (F.sum("bin_count").over(w_cum).cast("double") / F.sum("bin_count").over(w_tot)).alias(
-            "surviving_frac"
-        ),
-    )
+    band = shower(core.read_events_stream(spark, sf_dir)).filter(band_cut())
+    hist = histogram(band, "p", 100, by=["label"])
+    sink_tbl = core.run_to_memory(hist, "stream_survival_sink", state_partitions=8)
+    return survival_from_histogram(spark.table(sink_tbl))
 
 
 @register(

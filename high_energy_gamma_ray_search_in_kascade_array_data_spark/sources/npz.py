@@ -66,11 +66,3 @@ def read_npz(spark: SparkSession, path_glob: str) -> DataFrame:
 
     return binary.select("path", "content").mapInPandas(decode, DECODED_SCHEMA)
 
-
-def write_npz(df_pandas: pd.DataFrame, path: str, key: str = "data") -> None:
-    """Test helper: persist a pandas frame of array rows as an NPZ
-    archive shaped like the reference's inputs."""
-    import numpy as np
-
-    arr = np.stack(df_pandas["values"].to_numpy())
-    np.savez(path, **{key: arr})

@@ -11,7 +11,7 @@ construction.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite") -> None:
@@ -20,11 +20,3 @@ def write_partitioned(df: DataFrame, path: str, partition_cols: list[str], mode:
     partitionBy keeps file-level pruning portable."""
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
-
-def read_partition(spark: SparkSession, path: str, **partition_values: str) -> DataFrame:
-    """Read with partition pruning: filters on partition columns never
-    touch non-matching files."""
-    df = spark.read.parquet(path)
-    for col, val in partition_values.items():
-        df = df.filter(df[col] == val)
-    return df

@@ -14,8 +14,9 @@ State-boundedness notes (the 100 TB concern):
   * session windows — merged-on-arrival state per (user, open session);
   * streaming dedup — state per key inside the watermark horizon
     (``dropDuplicatesWithinWatermark``), NOT unbounded exact dedup;
-  * incremental histogram — state is nbins×n_keys counters (update
-    mode), the streaming reading of A5.
+  * incremental histogram (``operators/survival.py::histogram`` on a
+    stream) — state is nbins×n_keys counters (update mode), the
+    streaming reading of A5.
 """
 
 from __future__ import annotations
@@ -103,16 +104,6 @@ def sliding_counts(events: DataFrame, duration: str = "2 hours", slide: str = "1
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "n")
     )
-
-
-def value_histogram(events: DataFrame, nbins: int = 40, lo: float = 0.0, hi: float = 400.0) -> DataFrame:
-    """Incremental fixed-width histogram (streaming A5): state is one
-    counter per (bin) — bounded by nbins regardless of stream length."""
-    width = (hi - lo) / nbins
-    bin_col = F.least(
-        F.floor((F.col("value") - F.lit(lo)) / F.lit(width)), F.lit(nbins - 1)
-    ).cast("int")
-    return events.groupBy(bin_col.alias("bin")).agg(F.count(F.lit(1)).alias("bin_count"))
 
 
 def session_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:

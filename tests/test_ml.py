@@ -276,6 +276,22 @@ def test_cnn_tiny_hand_computed():
         assert q_full[0, o, 5, 7] == v
 
 
+def test_cnn_scorer_builds_without_warning(spark, tmp_path):
+    """The CNN scorer is a plain scalar pandas UDF built from an
+    unannotated function; the deprecated ``PandasUDFType`` form warned
+    on every build."""
+    import warnings
+
+    from pyspark.util import PythonEvalType
+
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.ml import cnn
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        udf = cnn.make_cnn_scorer_udf(str(tmp_path / "cnn_b.npz"))
+    assert udf.evalType == PythonEvalType.SQL_SCALAR_PANDAS_UDF
+
+
 def test_cnn_artifact_executor_roundtrip(spark, sf_dir):
     """The registered query's persisted-artifact path: driver-side
     forward (state in memory) == executor-side forward (state reloaded

@@ -690,11 +690,12 @@ def test_aqe_skew_join_splits_at_runtime(spark, sf_dir):
 
 
 def _plan_nodes(df) -> list[str]:
-    """Operator names in the tree of the formatted physical plan."""
+    """Operator names in the tree of the formatted physical plan, without
+    the whole-stage-codegen `*` marker."""
     import re
 
     tree = physical_plan(df).split("\n\n", 1)[0].splitlines()[1:]
-    return [re.sub(r"^[\s:+-]*|\s*\(\d+\)$", "", line) for line in tree]
+    return [re.sub(r"^[\s:+*-]*|\s*\(\d+\)$", "", line) for line in tree]
 
 
 def test_prepare_datasets_runs_the_split_window_once(spark, sf_dir):
@@ -710,10 +711,45 @@ def test_prepare_datasets_runs_the_split_window_once(spark, sf_dir):
     assert "Union" not in nodes, nodes
 
 
-def test_augment_rotations_scans_the_grid_once(spark, sf_dir):
-    nodes = _plan_nodes(_q("augment_rotations", spark, sf_dir))
+@pytest.mark.parametrize("name", ["augment_rotations", "rotate_grid", "rotate_azimuth_core"])
+def test_rotations_scan_once_in_one_generate(name, spark, sf_dir):
+    """Every rotation query expands its rows with the one rotation
+    ``Generate`` of ``etl.expand_rotations`` over one scan, not a union
+    of per-rotation branches that each re-read the input."""
+    nodes = _plan_nodes(_q(name, spark, sf_dir))
     assert nodes.count("Scan parquet") == 1, nodes
+    assert nodes.count("Generate") == 1, nodes
     assert "Union" not in nodes, nodes
+
+
+@pytest.mark.parametrize(
+    "name", ["survival_curve", "analysis_pipeline_survival", "analysis_pipeline_survival_eval"]
+)
+def test_survival_queries_scan_once_without_join(name, spark, sf_dir):
+    """The survival curve keeps the histogram's ``bin_count``, so no
+    second histogram is joined back, and the analysis pipeline fits no
+    scaler: one scan of events and no join node."""
+    nodes = _plan_nodes(_q(name, spark, sf_dir))
+    assert nodes.count("Scan parquet") == 1, nodes
+    assert not [n for n in nodes if "Join" in n or "Cartesian" in n], nodes
+
+
+def test_stream_survival_windows_compute_each_sum_once(spark, sf_dir, monkeypatch):
+    """The streamed curve's windows over the sink table compute the
+    cumulative and the class sum once each; the fraction reads them.
+    The drain is replaced by an empty table of the sink's schema, so
+    no stream runs."""
+    from high_energy_gamma_ray_search_in_kascade_array_data_spark.streaming import core
+
+    def empty_sink(df, name, **_):
+        spark.createDataFrame([], df.schema).createOrReplaceTempView(name)
+        return name
+
+    monkeypatch.setattr(core, "run_to_memory", empty_sink)
+    plan = physical_plan(_q("stream_survival_curve", spark, sf_dir))
+    spark.catalog.dropTempView("stream_survival_sink")
+    window_args = [line for line in plan.splitlines() if "windowspecdefinition" in line]
+    assert sum(line.count("sum(bin_count") for line in window_args) == 2, window_args
 
 
 @pytest.mark.parametrize("name", ["stratified_split", "etl_prepare_datasets"])

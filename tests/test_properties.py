@@ -83,13 +83,18 @@ def test_stratified_split_partitions_input_exactly(spark, sf_dir):
 
 
 def test_survival_curve_monotone_ends_at_one(spark, sf_dir):
-    """Survival curves are monotone nondecreasing and end at 1.0 (A6)."""
+    """Survival curves are monotone nondecreasing and end at 1.0 (A6);
+    ``cum_count`` is the running sum of ``bin_count`` and ends at
+    ``class_total``."""
     df = shower_frame(spark, sf_dir)
     curve = survival_curve(df, "label", "p", nbins=50).toPandas()
     for label, grp in curve.sort_values("bin").groupby("label"):
         fr = grp["surviving_frac"].to_numpy()
         assert (fr[1:] >= fr[:-1] - 1e-12).all()
         assert abs(fr[-1] - 1.0) < 1e-12
+        cum = grp["cum_count"].to_numpy()
+        assert cum.tolist() == grp["bin_count"].cumsum().tolist()
+        assert cum[-1] == grp["class_total"].iloc[-1]
 
 
 def test_split_determinism_same_seed_same_assignment(spark, sf_dir):
