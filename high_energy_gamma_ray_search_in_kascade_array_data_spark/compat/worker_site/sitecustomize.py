@@ -11,7 +11,60 @@ protocol has a ~10 s connect-back timeout that a slow sitecustomize
 would blow. Installing the meta-path finder costs microseconds; the
 vendored modules load only if something actually imports
 ``google.protobuf``. Guarded: any failure leaves the interpreter
-exactly as it was."""
+exactly as it was.
+
+It also keeps pyspark's per-task ``importlib.invalidate_caches()``
+from re-reading every zip archive on the worker's path (below)."""
+
+# Before Python 3.13, zipimporter.invalidate_caches re-reads the whole
+# central directory of its archive, and pyspark's worker calls
+# importlib.invalidate_caches() once per task. The worker's path holds
+# pyspark.zip, the py4j zip and the spark-core jar: 17 importers and
+# about 32k entries read again for every task, most of a small Python
+# task's time. Here an importer re-reads only when its archive's stat
+# key differs from the key taken when the directory was read. The keys
+# are seeded from the directories site.py read while it searched for
+# this module. 3.13+ reads lazily (zipimporter._get_files) and is left
+# alone.
+try:
+    import os
+    import zipimport
+
+    if not hasattr(zipimport.zipimporter, "_get_files"):
+        _zip_read_directory = zipimport._read_directory
+        _zip_invalidate_caches = zipimport.zipimporter.invalidate_caches
+        _zip_dirs = {}  # archive -> (directory, stat key taken before it was read)
+
+        def _zip_key(archive):
+            try:
+                st = os.stat(archive)
+            except OSError:
+                return None
+            return st.st_mtime_ns, st.st_size, st.st_ino
+
+        def _read_directory(archive):
+            _zip_dirs.pop(archive, None)
+            key = _zip_key(archive)
+            files = _zip_read_directory(archive)
+            if key is not None:
+                _zip_dirs[archive] = files, key
+            return files
+
+        def _invalidate_caches_if_changed(self):
+            held = _zip_dirs.get(self.archive)
+            if held is not None and held[1] == _zip_key(self.archive):
+                self._files = zipimport._zip_directory_cache[self.archive] = held[0]
+            else:
+                _zip_invalidate_caches(self)
+
+        for _archive, _files in list(zipimport._zip_directory_cache.items()):
+            _key = _zip_key(_archive)
+            if _key is not None:
+                _zip_dirs[_archive] = _files, _key
+        zipimport._read_directory = _read_directory
+        zipimport.zipimporter.invalidate_caches = _invalidate_caches_if_changed
+except Exception:  # noqa: BLE001 — never break interpreter startup
+    pass
 
 try:
     import importlib

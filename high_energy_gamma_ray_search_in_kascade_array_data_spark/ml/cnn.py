@@ -25,8 +25,8 @@ hash-checkable against DuckDB):
   (``FLOOR(v · 1024)/1024`` — exact: power-of-two scaling).  A
   step/magnitude audit (see ``_EXACTNESS`` below) shows every partial
   sum in every layer then fits in ≤ 45 mantissa bits, so float64
-  addition is EXACT and summation order is irrelevant — numpy einsum
-  on the Spark side and DuckDB's hash-aggregate SUM produce
+  addition is EXACT and summation order is irrelevant — the numpy
+  GEMM on the Spark side and DuckDB's hash-aggregate SUM produce
   bit-identical values.  This is inference-time quantization, the same
   trick int8-served models use, applied to make a distributed forward
   pass deterministic at any partitioning.
@@ -116,6 +116,22 @@ def cnn_state() -> dict:
 
 
 # ------------------------------------------------------ numpy forward
+def conv_block(state: dict, li: int, x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Conv block ``li`` over ``x`` (B, C, H, W): the pre-activation
+    ``z`` = Conv2d(k=3, valid) + bias, (B, O, H-2, W-2), and the block
+    output, ReLU → folded BN → 2⁻¹⁰ re-quantization of ``z``. The conv
+    is one GEMM: ``np.tensordot`` contracts the (B, C, H-2, W-2, 3, 3)
+    window view with the (O, C, 3, 3) kernel over (C, 3, 3)."""
+    win = np.lib.stride_tricks.sliding_window_view(x, (3, 3), axis=(2, 3))
+    z = np.moveaxis(np.tensordot(win, state[f"conv{li}.weight"], axes=([1, 4, 5], [1, 2, 3])), 3, 1)
+    z = z + state[f"conv{li}.bias"][None, :, None, None]
+    h = (
+        state[f"bn{li}.scale"][None, :, None, None] * np.maximum(z, 0.0)
+        + state[f"bn{li}.shift"][None, :, None, None]
+    )
+    return z, np.floor(h * _Q) / _Q
+
+
 def cnn_forward(state: dict, feats: np.ndarray, grids: np.ndarray) -> np.ndarray:
     """Batch CNN_B forward: ``feats`` (B, 11), ``grids`` (B, 2, 16, 16)
     → logits (B,) = z₀ − z₁ (two-class output collapsed to a single
@@ -125,15 +141,7 @@ def cnn_forward(state: dict, feats: np.ndarray, grids: np.ndarray) -> np.ndarray
     fc stack (dropout is identity at inference)."""
     x = grids.astype("float64", copy=False)
     for li, _n_out, _n_in in CONVS:
-        w = state[f"conv{li}.weight"]
-        b = state[f"conv{li}.bias"]
-        win = np.lib.stride_tricks.sliding_window_view(x, (3, 3), axis=(2, 3))
-        z = np.einsum("bcyxrs,ocrs->boyx", win, w) + b[None, :, None, None]
-        h = (
-            state[f"bn{li}.scale"][None, :, None, None] * np.maximum(z, 0.0)
-            + state[f"bn{li}.shift"][None, :, None, None]
-        )
-        x = np.floor(h * _Q) / _Q
+        _z, x = conv_block(state, li, x)
     flat = x.reshape(x.shape[0], -1)  # C-order: ch*100 + y*10 + x, = torch .view
     a = np.concatenate([feats.astype("float64", copy=False), flat], axis=1)
     for lf, _n_out, _n_in in FCS:
@@ -183,7 +191,7 @@ def cnn_oracle_sql(final_select: str | None = None) -> str:
     w[o,i,r,c]), folded-BN as a per-channel affine, FLOOR
     re-quantization, fc layers as weight-relation join-aggregates.
     Because every value is exact (see module docstring), DuckDB's
-    hash-aggregate SUM is bit-identical to numpy einsum.
+    hash-aggregate SUM is bit-identical to the numpy GEMM.
 
     ``final_select`` replaces the default terminal SELECT (it sees the
     ``lg`` CTE with columns event_id, logit) so downstream pipelines —

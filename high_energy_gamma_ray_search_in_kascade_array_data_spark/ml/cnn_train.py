@@ -93,16 +93,8 @@ def forward_intermediates(state: dict, feats: np.ndarray, grids: np.ndarray) -> 
     acts = {0: x}
     cmask = {}
     for li, _n_out, _n_in in cnn.CONVS:
-        w = state[f"conv{li}.weight"]
-        b = state[f"conv{li}.bias"]
-        win = np.lib.stride_tricks.sliding_window_view(x, (3, 3), axis=(2, 3))
-        z = np.einsum("bcyxrs,ocrs->boyx", win, w) + b[None, :, None, None]
+        z, x = cnn.conv_block(state, li, x)
         cmask[li] = z > 0
-        h = (
-            state[f"bn{li}.scale"][None, :, None, None] * np.maximum(z, 0.0)
-            + state[f"bn{li}.shift"][None, :, None, None]
-        )
-        x = np.floor(h * _Q) / _Q
         acts[li] = x
     flat = x.reshape(x.shape[0], -1)
     a = {1: np.concatenate([feats.astype("float64", copy=False), flat], axis=1)}

@@ -113,27 +113,26 @@ def prepare_datasets(
     return add_direction_features(augmented)
 
 
-def analysis_pipeline(
-    shower: DataFrame,
-    score_weights: tuple[float, ...] = (0.8, -0.05, 1.5, 0.02),
-    score_bias: float = -12.0,
-    nbins: int = 100,
-    e_band: tuple[float, float] = (15.0, 16.0),
-) -> DataFrame:
+# The stand-in model of the analysis chain, σ(b + w·x) over four shower
+# observables. pandas_udf_inference scores the same model through an
+# Arrow UDF. Each keeps its own summation order: its oracle, and here
+# the histogram's bin edges, depend on it.
+SCORE_WEIGHTS = {"lg_e": 0.8, "ze": -0.05, "p": 1.5, "core_x": 0.02}
+SCORE_BIAS = -12.0
+# the SQL twin of analysis_pipeline's logit, bias first
+SCORE_LOGIT_SQL = f"{SCORE_BIAS}" + "".join(f" {'-' if w < 0 else '+'} {abs(w)}*{c}" for c, w in SCORE_WEIGHTS.items())
+
+
+def analysis_pipeline(shower: DataFrame, e_band: tuple[float, float] = (15.0, 16.0)) -> DataFrame:
     """Entry points 3.2/3.3 analytical spine as one DAG over one scan:
 
     stand-in model score → energy/zenith band filter → survival curve.
     Standardization is its own step (``scaler_fit`` / ``scaler_apply``);
     the stand-in score reads the raw features, so none is fitted here.
     """
-    w = score_weights
-    z = (
-        F.lit(score_bias)
-        + F.col("lg_e") * w[0]
-        + F.col("ze") * w[1]
-        + F.col("p") * w[2]
-        + F.col("core_x") * w[3]
-    )
+    z = F.lit(SCORE_BIAS)
+    for c, w in SCORE_WEIGHTS.items():
+        z = z + F.col(c) * w
     scored = shower.withColumn("score", F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))
-    curve = survival_curve(scored.filter(band_cut(e_band)), label_col="label", prob_col="score", nbins=nbins)
+    curve = survival_curve(scored.filter(band_cut(e_band)), label_col="label", prob_col="score", nbins=100)
     return curve.drop("bin_count")

@@ -9,15 +9,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.ml import cnn, inference, pipeline
-from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators.etl import band_cut
+from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators.etl import SCORE_BIAS, SCORE_WEIGHTS, band_cut
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators.survival import survival_curve
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.common import SHOWER_CTE, shower, shower_frame
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.registry import register
-
-# Fixed stand-in "model": σ(w·x + b) over four shower observables.
-_W = (0.8, -0.05, 1.5, 0.02)
-_COLS = ("lg_e", "ze", "p", "core_x")
-_B = -12.0
 
 
 def _mlp_state() -> dict:
@@ -52,7 +47,7 @@ _MLP_INPUT_EXPRS = ("(lg_e - 15.0)", "(ze / 45.0)", "p", "(core_x / 16.0)")
     oracle=f"""
 WITH {SHOWER_CTE}
 SELECT event_id,
-       ROUND(1.0 / (1.0 + EXP(-({_W[0]}*lg_e + {_W[1]}*ze + {_W[2]}*p + {_W[3]}*core_x + {_B}))), 6) AS score
+       ROUND(1.0 / (1.0 + EXP(-({" + ".join(f"{w}*{c}" for c, w in SCORE_WEIGHTS.items())} + {SCORE_BIAS}))), 6) AS score
 FROM shower
 """,
 )
@@ -63,8 +58,8 @@ def q_pandas_udf_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectorized numpy kernel. The stand-in linear-logistic model keeps
     it oracle-checkable; a torch model drops into the same UDF."""
     df = shower_frame(spark, sf_dir)
-    feats = F.array(*[F.col(c).cast("double") for c in _COLS])
-    score = inference.make_linear_scorer_udf(_W, _B)
+    feats = F.array(*[F.col(c).cast("double") for c in SCORE_WEIGHTS])
+    score = inference.make_linear_scorer_udf(SCORE_WEIGHTS.values(), SCORE_BIAS)
     return df.select("event_id", F.round(score(feats), 6).alias("score"))
 
 
@@ -1420,13 +1415,13 @@ def q_grouped_auc_by_band(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neg",
         (F.sum("neg").over(wc) - F.col("neg")).alias("neg_below"),
     )
-    t = h.groupBy("band").agg(F.sum("pos").alias("p"), F.sum("neg").alias("n"))
     agg = c.groupBy("band").agg(
-        F.sum(F.col("pos") * (2 * F.col("neg_below") + F.col("neg"))).alias("auc_num2")
+        F.sum("pos").alias("p"),
+        F.sum("neg").alias("n"),
+        F.sum(F.col("pos") * (2 * F.col("neg_below") + F.col("neg"))).alias("auc_num2"),
     )
     return (
-        agg.join(F.broadcast(t), "band")
-        .select(
+        agg.select(
             "band",
             F.col("p").alias("n_pos"),
             F.col("n").alias("n_neg"),

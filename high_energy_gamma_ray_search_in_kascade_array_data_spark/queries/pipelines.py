@@ -69,7 +69,7 @@ def q_etl_prepare_datasets(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH {SHOWER_CTE},
 scored AS (
   SELECT label, ze, lg_e,
-         1.0 / (1.0 + EXP(-(-12.0 + 0.8*lg_e - 0.05*ze + 1.5*p + 0.02*core_x))) AS score
+         1.0 / (1.0 + EXP(-({etl.SCORE_LOGIT_SQL}))) AS score
   FROM shower
 ),
 band AS (
@@ -106,7 +106,7 @@ def q_analysis_pipeline_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH {SHOWER_CTE},
 scored AS (
   SELECT label, ze, lg_e,
-         1.0 / (1.0 + EXP(-(-12.0 + 0.8*lg_e - 0.05*ze + 1.5*p + 0.02*core_x))) AS score
+         1.0 / (1.0 + EXP(-({etl.SCORE_LOGIT_SQL}))) AS score
   FROM shower
 ),
 band AS (

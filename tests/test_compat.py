@@ -8,13 +8,19 @@ the finder; these tests pin that behavior. They build their own fake
 vendored protobuf dir, so they are green with and without the Google
 Cloud SDK present, and they snapshot/restore all import state so the
 rest of the suite (streaming uses the real shim) is unaffected.
+
+The tests at the end cover ``worker_site/sitecustomize.py``'s zip
+block, which keeps a worker's per-task ``importlib.invalidate_caches()``
+from re-reading unchanged zip archives.
 """
 
 from __future__ import annotations
 
 import importlib.util
 import os
+import subprocess
 import sys
+import zipfile
 
 import pytest
 
@@ -120,3 +126,92 @@ def test_install_is_idempotent_and_reports_availability(google_import_state):
 def test_worker_site_dir_has_sitecustomize():
     d = pbshim.worker_site_dir()
     assert os.path.isfile(os.path.join(d, "sitecustomize.py"))
+
+
+# ------------------------------------------------- worker zip re-read block
+_LAZY_ZIPIMPORT = pytest.mark.skipif(
+    sys.version_info >= (3, 13), reason="zipimport reads lazily from 3.13 on; the block stays off"
+)
+
+# Counts zipimport's directory reads from here on.
+_COUNT_READS = """
+import importlib, os, sys, zipfile, zipimport
+archive = sys.argv[1]
+reads = []
+_read = zipimport._read_directory
+def _counting(path):
+    reads.append(path)
+    return _read(path)
+zipimport._read_directory = _counting
+"""
+
+
+def _worker_shaped(tmp_path, code: str) -> list[str]:
+    """Run ``code`` after ``_COUNT_READS`` in a new interpreter whose
+    path is shaped like a pyspark worker's: a zip archive ahead of the
+    worker_site directory. Returns its stdout lines."""
+    archive = tmp_path / "lib.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zmod_a.py", "A = 1\n")
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join([str(archive), pbshim.worker_site_dir()]))
+    proc = subprocess.run(
+        [sys.executable, "-c", _COUNT_READS + code, str(archive)],
+        env=env, capture_output=True, text=True, timeout=60,
+    )
+    assert proc.returncode == 0, proc.stderr
+    return proc.stdout.split()
+
+
+@_LAZY_ZIPIMPORT
+def test_unchanged_archive_is_not_reread(tmp_path):
+    """While the archive is unchanged, repeated invalidations read no
+    zip directory, the one site.py read included."""
+    out = _worker_shaped(
+        tmp_path,
+        """
+import zmod_a
+for _ in range(5):
+    importlib.invalidate_caches()
+print(len(reads), zmod_a.A, zipimport.zipimporter.invalidate_caches.__module__)
+""",
+    )
+    assert out == ["0", "1", "sitecustomize"]
+
+
+@_LAZY_ZIPIMPORT
+def test_replaced_archive_is_reread(tmp_path):
+    """An archive replaced through ``os.replace`` is read again at the
+    next invalidation, and a module added to it imports."""
+    out = _worker_shaped(
+        tmp_path,
+        """
+importlib.invalidate_caches()
+print(len(reads))
+new = archive + ".new"
+with zipfile.ZipFile(new, "w") as z:
+    z.writestr("zmod_a.py", "A = 1\\n")
+    z.writestr("zmod_b.py", "B = 2\\n")
+os.replace(new, archive)
+importlib.invalidate_caches()
+print(reads.count(archive))
+import zmod_b
+importlib.invalidate_caches()
+print(reads.count(archive), zmod_b.B)
+""",
+    )
+    assert out == ["0", "1", "1", "2"]
+
+
+@_LAZY_ZIPIMPORT
+def test_python_workers_run_the_zip_block(spark):
+    """The session puts worker_site on the Python workers' path, so a
+    worker's ``zipimporter.invalidate_caches`` is the block's."""
+
+    def probe(_):
+        import zipimport
+
+        f = zipimport.zipimporter.invalidate_caches
+        yield f.__module__, f.__name__
+
+    got = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()
+    assert got == [("sitecustomize", "_invalidate_caches_if_changed")]

@@ -163,16 +163,17 @@ def _cnn_forward_slow(state, feats, grids):
 
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.ml.cnn import CONVS, FCS
 
+    # plain Python floats, so the loops below are Python arithmetic only
+    st = {k: v.tolist() for k, v in state.items()}
     out = []
     for bi in range(grids.shape[0]):
-        x = [[[float(grids[bi, c, y, xx]) for xx in range(16)] for y in range(16)]
-             for c in range(grids.shape[1])]
+        x = grids[bi].tolist()
         size = 16
         for li, n_out, n_in in CONVS:
-            w = state[f"conv{li}.weight"]
-            b = state[f"conv{li}.bias"]
-            s = state[f"bn{li}.scale"]
-            t = state[f"bn{li}.shift"]
+            w = st[f"conv{li}.weight"]
+            b = st[f"conv{li}.bias"]
+            s = st[f"bn{li}.scale"]
+            t = st[f"bn{li}.shift"]
             size -= 2
             nxt = []
             for o in range(n_out):
@@ -180,22 +181,22 @@ def _cnn_forward_slow(state, feats, grids):
                 for y in range(size):
                     row = []
                     for xx in range(size):
-                        acc = float(b[o])
+                        acc = b[o]
                         for i in range(n_in):
                             for r in range(3):
                                 for c in range(3):
-                                    acc += float(w[o, i, r, c]) * x[i][y + r][xx + c]
-                        v = float(s[o]) * max(acc, 0.0) + float(t[o])
+                                    acc += w[o][i][r][c] * x[i][y + r][xx + c]
+                        v = s[o] * max(acc, 0.0) + t[o]
                         row.append(math.floor(v * 1024.0) / 1024.0)
                     plane.append(row)
                 nxt.append(plane)
             x = nxt
         flat = [x[c][y][xx] for c in range(len(x)) for y in range(size) for xx in range(size)]
-        a = [float(v) for v in feats[bi]] + flat
+        a = feats[bi].tolist() + flat
         for lf, n_out, n_in in FCS:
-            w = state[f"fc{lf}.weight"]
-            b = state[f"fc{lf}.bias"]
-            z = [float(b[u]) + sum(float(w[u, j]) * a[j] for j in range(n_in)) for u in range(n_out)]
+            w = st[f"fc{lf}.weight"]
+            b = st[f"fc{lf}.bias"]
+            z = [b[u] + sum(w[u][j] * a[j] for j in range(n_in)) for u in range(n_out)]
             if lf < 3:
                 a = [math.floor(max(v, 0.0) * 1024.0) / 1024.0 for v in z]
             else:
@@ -205,32 +206,34 @@ def _cnn_forward_slow(state, feats, grids):
 
 
 def test_cnn_forward_matches_slow_reference():
-    """Vectorized einsum forward == independent triple-loop forward,
+    """Vectorized GEMM forward == independent triple-loop forward,
     BIT-exactly, on the corpus input formulas — validates conv padding,
     flatten order (torch .view C-order), features-first concat and the
     quantization steps all at once. Exactness (ml/cnn.py docstring)
-    means zero tolerance is the correct comparison."""
+    means zero tolerance is the correct comparison. Batches of one
+    event, a few and over a hundred."""
     import numpy as np
 
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.ml import cnn
 
     state = cnn.cnn_state()
-    eids = np.array([0, 199, 398, 597])
     m = np.arange(256)
     k = np.arange(cnn.N_FEATS)
-    feats = np.stack([((e * (2 * k + 3)) % 257 - 128) / 256.0 for e in eids])
-    edep = np.stack([((e * (m + 7)) % 97) / 16.0 for e in eids]).reshape(-1, 16, 16)
-    muons = np.stack([((e * (m + 13)) % 89) / 16.0 for e in eids]).reshape(-1, 16, 16)
-    grids = np.stack([edep, muons], axis=1)
-    fast = cnn.cnn_forward(state, feats, grids)
-    slow = _cnn_forward_slow(state, feats, grids)
-    assert fast.tolist() == slow  # bit-exact, no tolerance
+    for n_events in (1, 4, 120):
+        e = np.arange(n_events)[:, None] * cnn.EVENT_MOD
+        feats = ((e * (2 * k + 3)) % 257 - 128) / 256.0
+        edep = (((e * (m + 7)) % 97) / 16.0).reshape(-1, 16, 16)
+        muons = (((e * (m + 13)) % 89) / 16.0).reshape(-1, 16, 16)
+        grids = np.stack([edep, muons], axis=1)
+        fast = cnn.cnn_forward(state, feats, grids)
+        slow = _cnn_forward_slow(state, feats, grids)
+        assert fast.tolist() == slow, n_events  # bit-exact, no tolerance
 
-    # batch-order invariance: exact arithmetic means a permuted batch
-    # returns exactly permuted results (any partitioning is safe)
-    perm = np.array([2, 0, 3, 1])
-    fast_perm = cnn.cnn_forward(state, feats[perm], grids[perm])
-    assert fast_perm.tolist() == [fast[i] for i in perm]
+        # batch-order invariance: exact arithmetic means a permuted batch
+        # returns exactly permuted results (any partitioning is safe)
+        perm = np.random.default_rng(0).permutation(n_events)
+        fast_perm = cnn.cnn_forward(state, feats[perm], grids[perm])
+        assert fast_perm.tolist() == [fast[i] for i in perm], n_events
 
 
 def test_cnn_tiny_hand_computed():
@@ -253,8 +256,7 @@ def test_cnn_tiny_hand_computed():
     grids[0, 0, 5, 7] = 1.0  # impulse in channel 0 at (y=5, x=7)
     feats = np.zeros((1, cnn.N_FEATS))
 
-    win = np.lib.stride_tricks.sliding_window_view(grids, (3, 3), axis=(2, 3))
-    z = np.einsum("bcyxrs,ocrs->boyx", win, w) + b[None, :, None, None]
+    z, q = cnn.conv_block(state, 1, grids)
     # impulse at (5,7) contributes w[o,0,r,c] to output (5-r, 7-c)
     for o in range(w.shape[0]):
         for r in range(3):
@@ -267,13 +269,7 @@ def test_cnn_tiny_hand_computed():
         # scalar python (relu -> BN affine -> quantize) and compared to
         # the vectorized forward's first-layer output
         v = math.floor((s[o] * max(w[o, 0, 0, 0] + b[o], 0.0) + t[o]) * 1024.0) / 1024.0
-        win_full = np.lib.stride_tricks.sliding_window_view(grids, (3, 3), axis=(2, 3))
-        z_full = np.einsum("bcyxrs,ocrs->boyx", win_full, w) + b[None, :, None, None]
-        h_full = (
-            s[None, :, None, None] * np.maximum(z_full, 0.0) + t[None, :, None, None]
-        )
-        q_full = np.floor(h_full * 1024.0) / 1024.0
-        assert q_full[0, o, 5, 7] == v
+        assert q[0, o, 5, 7] == v
 
 
 def test_cnn_scorer_builds_without_warning(spark, tmp_path):

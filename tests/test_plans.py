@@ -734,6 +734,15 @@ def test_survival_queries_scan_once_without_join(name, spark, sf_dir):
     assert not [n for n in nodes if "Join" in n or "Cartesian" in n], nodes
 
 
+def test_grouped_auc_scans_events_once_without_join(spark, sf_dir):
+    """Each band's positive and negative totals come from the aggregate
+    that sums the AUC numerator, so no second aggregate of the (band,
+    score) histogram re-reads events and is joined back."""
+    nodes = _plan_nodes(_q("grouped_auc_by_band", spark, sf_dir))
+    assert nodes.count("Scan parquet") == 1, nodes
+    assert not [n for n in nodes if "Join" in n or "Cartesian" in n], nodes
+
+
 def test_stream_survival_windows_compute_each_sum_once(spark, sf_dir, monkeypatch):
     """The streamed curve's windows over the sink table compute the
     cumulative and the class sum once each; the fraction reads them.
