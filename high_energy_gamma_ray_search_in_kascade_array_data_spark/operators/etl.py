@@ -44,14 +44,14 @@ def band_cut(e_band: tuple[float, float] = (15.0, 16.0)) -> Column:
 
 def stratified_split_assign(df: DataFrame, rnd: F.Column) -> DataFrame:
     """Exact stratified split assignment (X1): percent_rank over the
-    seeded draw ``rnd`` within each class, projected once (so the
-    ``Window`` computes it once) and bucketed at 0.6/0.8."""
+    seeded draw ``rnd`` within each class, ties broken by ``event_id``,
+    projected once (so the ``Window`` computes it once) as ``split``,
+    then bucketed at 0.6/0.8 in place."""
     w = Window.partitionBy("label").orderBy(rnd.asc(), F.col("event_id").asc())
-    pr = F.col("_pr")
-    return df.withColumn("_pr", F.percent_rank().over(w)).withColumn(
-        "split",
-        F.when(pr < 0.6, F.lit("train")).when(pr < 0.8, F.lit("valid")).otherwise(F.lit("test")),
-    ).drop("_pr")
+    pr = F.col("split")
+    return df.withColumn("split", F.percent_rank().over(w)).withColumn(
+        "split", F.when(pr < 0.6, F.lit("train")).when(pr < 0.8, F.lit("valid")).otherwise(F.lit("test"))
+    )
 
 
 def rotate_shower(k: int) -> dict[str, Column]:
@@ -85,7 +85,7 @@ def expand_rotations(
 def add_direction_features(df: DataFrame) -> DataFrame:
     """Direction cosines (F2/T3) appended as columns."""
     dx, dy, dz = physics.direction_cosines(F.col("ze"), F.col("az"))
-    return df.withColumn("dir_x", dx).withColumn("dir_y", dy).withColumn("dir_z", dz)
+    return df.withColumns({"dir_x": dx, "dir_y": dy, "dir_z": dz})
 
 
 def prepare_datasets(

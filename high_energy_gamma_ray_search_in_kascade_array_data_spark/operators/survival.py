@@ -49,15 +49,17 @@ def survival_curve(df: DataFrame, label_col: str = "label", prob_col: str = "p",
 def survival_from_histogram(hist: DataFrame, label_col: str = "label") -> DataFrame:
     """Stages 2–3 on a relation already binned to (label, bin,
     bin_count) — the output of :func:`histogram`, or a histogram a
-    stream keeps up to date. Each window sum is projected once and the
-    fraction reads the projected columns."""
+    stream keeps up to date. Both window sums are projected once, in
+    one projection, and the fraction reads the projected columns."""
     w_cum = Window.partitionBy(label_col).orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
     w_all = Window.partitionBy(label_col)
-    return (
-        hist.withColumn("cum_count", F.sum("bin_count").over(w_cum))
-        .withColumn("class_total", F.sum("bin_count").over(w_all))
-        # exact single IEEE division of two integers — bit-identical in
-        # any engine, no rounding needed
-        .withColumn("surviving_frac", F.col("cum_count").cast("double") / F.col("class_total"))
-        .select(label_col, "bin", "bin_count", "cum_count", "class_total", "surviving_frac")
+    sums = hist.select(
+        label_col,
+        "bin",
+        "bin_count",
+        F.sum("bin_count").over(w_cum).alias("cum_count"),
+        F.sum("bin_count").over(w_all).alias("class_total"),
     )
+    # exact single IEEE division of two integers — bit-identical in
+    # any engine, no rounding needed
+    return sums.withColumn("surviving_frac", F.col("cum_count").cast("double") / F.col("class_total"))

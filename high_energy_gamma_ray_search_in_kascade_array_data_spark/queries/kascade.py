@@ -401,7 +401,7 @@ def q_rotate_grid_wide_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     higher-order ``aggregate`` (which is ``CodegenFallback`` —
     interpreted, ~73M lambda-ops/s measured). At a 1M-event sf1
     replica the vectorized kernel is ~5x the HOF (0.65 s vs 3.3 s
-    compute; PLANS.md 'rotate_grid_wide audit'). This is the
+    compute, measured in r10). This is the
     documented escape hatch when per-row dense-tensor arithmetic ever
     dominates a wide-form plan: keep the plan shape (scan → project,
     no shuffle), swap the kernel to Arrow batches."""

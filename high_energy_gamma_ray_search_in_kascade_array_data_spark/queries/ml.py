@@ -1389,8 +1389,10 @@ def q_grouped_auc_by_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     always segmented.  Same scale shape with the band as an extra key:
     ONE bounded-key aggregate over the fact ((band, score) ≤ 3×101
     cells), the cumulative window PARTITIONED by band (no global
-    ordering anywhere), and per-band exact integer numerators.  At
-    100 TB this evaluates every segment in a single pass."""
+    ordering anywhere, not even of the 3 output rows, whose sort would
+    plan a sampled range exchange), and per-band exact integer
+    numerators.  At 100 TB this evaluates every segment in a single
+    pass."""
     from pyspark.sql import Window
 
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.sources.catalog import load_table
@@ -1420,18 +1422,13 @@ def q_grouped_auc_by_band(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("neg").alias("n"),
         F.sum(F.col("pos") * (2 * F.col("neg_below") + F.col("neg"))).alias("auc_num2"),
     )
-    return (
-        agg.select(
-            "band",
-            F.col("p").alias("n_pos"),
-            F.col("n").alias("n_neg"),
-            F.col("auc_num2").cast("long").alias("auc_num2"),
-            (2 * F.col("p") * F.col("n")).cast("long").alias("auc_den2"),
-            F.round(
-                F.col("auc_num2").cast("double") / (2.0 * F.col("p") * F.col("n")), 6
-            ).alias("auc"),
-        )
-        .orderBy("band")
+    return agg.select(
+        "band",
+        F.col("p").alias("n_pos"),
+        F.col("n").alias("n_neg"),
+        F.col("auc_num2").cast("long").alias("auc_num2"),
+        (2 * F.col("p") * F.col("n")).cast("long").alias("auc_den2"),
+        F.round(F.col("auc_num2").cast("double") / (2.0 * F.col("p") * F.col("n")), 6).alias("auc"),
     )
 
 

@@ -7,6 +7,7 @@ differential-tested end-to-end."""
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -688,6 +689,34 @@ def q_dynamic_partition_pruning_join(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
+# serializes the drop and re-create of a bucketed table between threads
+_BUCKETED_LOCK = threading.Lock()
+
+
+def _bucketed_table(spark: SparkSession, sf_dir: str, name: str, src: str, key: str) -> DataFrame:
+    """Table ``name``: ``src`` bucketed (8) and sorted on ``key``.
+    The files are a derived fixture of the source table. The table is
+    registered afresh on every call, since a table kept from an
+    earlier call still lists the files of the copy it was made on."""
+    df = load_table(spark, sf_dir, src)
+
+    def build(tmp: str) -> None:
+        # saveAsTable is the only writer of a bucketed layout; the table
+        # it registers at tmp is external, so the drop below keeps its files
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        df.write.bucketBy(8, key).sortBy(key).option("path", tmp).saveAsTable(name)
+
+    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema)
+    with _BUCKETED_LOCK:
+        path = derived_fixture(os.path.join(SCRATCH, name), [os.path.join(sf_dir, f"{src}.parquet")], 1, build)
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        spark.sql(
+            f"CREATE TABLE {name} ({cols}) USING parquet CLUSTERED BY ({key}) SORTED BY ({key}) INTO 8 BUCKETS "
+            f"LOCATION '{path}'"
+        )
+        return spark.table(name)
+
+
 @register(
     "bucketed_join_no_shuffle",
     survey_ref="S4,§2.7,§2.5",
@@ -711,27 +740,11 @@ def q_bucketed_join_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     show SelectedBucketsCount and the only Exchange in the plan
     belongs to the final small aggregate. Merge hints force the SMJ so
     the demonstration never degrades to a broadcast at fixture scale;
-    table names and paths are SF-tagged."""
-    import os
-
+    table names and paths are SF-tagged, and each table's files are a
+    derived fixture of its source, rebuilt when that is rewritten."""
     tag = scratch_tag(sf_dir)
-    os.makedirs(SCRATCH, exist_ok=True)
-    tables = {
-        f"li_bucketed_{tag}": ("lineitem", "l_orderkey"),
-        f"ord_bucketed_{tag}": ("orders", "o_orderkey"),
-    }
-    for name, (src, key) in tables.items():
-        if not spark.catalog.tableExists(name):
-            (
-                load_table(spark, sf_dir, src)
-                .write.mode("overwrite")
-                .bucketBy(8, key)
-                .sortBy(key)
-                .option("path", os.path.join(SCRATCH, name))
-                .saveAsTable(name)
-            )
-    li = spark.table(f"li_bucketed_{tag}")
-    od = spark.table(f"ord_bucketed_{tag}")
+    li = _bucketed_table(spark, sf_dir, f"li_bucketed_{tag}", "lineitem", "l_orderkey")
+    od = _bucketed_table(spark, sf_dir, f"ord_bucketed_{tag}", "orders", "o_orderkey")
     j = li.hint("merge").join(od.hint("merge"), li["l_orderkey"] == od["o_orderkey"])
     rev = F.floor(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + F.lit(0.5)

@@ -120,6 +120,13 @@ def _start(
         # the driver's events fixture stores ts as TIMESTAMP(NANOS),
         # which vanilla Spark refuses — read as long, convert in catalog
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # PySpark 4 wraps every DataFrame and F.* call to record its
+        # Python call site: a stack walk and about five Py4J round trips
+        # each, a large share of a query's driver build. Errors keep
+        # their class, message and DataFrame fragment and lose only the
+        # caller's file:line. PySpark reads the flag once per process,
+        # from the first active session; extra_confs can turn it back on.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if cds is not None:
         # defaultJavaOptions, not extraJavaOptions: callers pass their

@@ -35,7 +35,7 @@ def main() -> int:
     n = len(corpus())
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     bad = []
-    for doc in ("README.md", "SCALE.md", "COVERAGE.md", "PLANS.md"):
+    for doc in ("README.md", "SCALE.md", "COVERAGE.md"):
         path = os.path.join(root, doc)
         if not os.path.exists(path):
             continue

@@ -25,7 +25,7 @@ if [ ${#SFS[@]} -eq 0 ]; then
   SFS=(/root/testdata/sf0.001 /root/testdata/sf0.01)
 fi
 
-echo "== preflight: registry-count consistency (README/SCALE/COVERAGE/PLANS) =="
+echo "== preflight: registry-count consistency (README/SCALE/COVERAGE) =="
 python scripts/check_counts.py || { echo "PREFLIGHT FAIL: stale corpus count in docs"; exit 1; }
 
 echo "== preflight: perfbench A/B against the reference commit =="

@@ -743,6 +743,14 @@ def test_grouped_auc_scans_events_once_without_join(spark, sf_dir):
     assert not [n for n in nodes if "Join" in n or "Cartesian" in n], nodes
 
 
+def test_grouped_auc_plans_no_range_exchange(spark, sf_dir):
+    """The 3 band rows are not sorted: a global sort plans a range
+    exchange, which adds a sampling job and a stage for 3 rows. Every
+    oracle check is order-insensitive."""
+    plan = physical_plan(_q("grouped_auc_by_band", spark, sf_dir))
+    assert "rangepartitioning" not in plan, plan
+
+
 def test_stream_survival_windows_compute_each_sum_once(spark, sf_dir, monkeypatch):
     """The streamed curve's windows over the sink table compute the
     cumulative and the class sum once each; the fraction reads them.

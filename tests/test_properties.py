@@ -4,11 +4,14 @@ DuckDB oracle."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import Window
 
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.functions import physics
+from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators import etl
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.operators.survival import survival_curve
 from high_energy_gamma_ray_search_in_kascade_array_data_spark.queries.common import detector_grid, rnd_col, shower_frame
 
@@ -56,30 +59,40 @@ def test_scaler_roundtrip_identity(spark, sf_dir):
     assert bad.count() == 0
 
 
+def _split_by_rank(n: int) -> list[str]:
+    """The split of each row of an n-row class, in rank order:
+    percent_rank (i/(n-1), 0 for a class of one) bucketed at 0.6/0.8."""
+    prs = [i / (n - 1) if n > 1 else 0.0 for i in range(n)]
+    return ["train" if pr < 0.6 else "valid" if pr < 0.8 else "test" for pr in prs]
+
+
+def _small_classes(spark):
+    """Classes of 1, 2 and 7 rows, their event_ids out of order."""
+    ids = {0: [7], 1: [5, 3], 2: [12, 4, 30, 9, 1, 8, 21]}
+    return spark.createDataFrame(
+        [(e, lbl) for lbl, es in ids.items() for e in es], "event_id long, label int"
+    ), ids
+
+
 def test_stratified_split_partitions_input_exactly(spark, sf_dir):
-    """The percent_rank split partitions each class to the exact
-    requested fractions and covers every row exactly once (X1)."""
-    df = shower_frame(spark, sf_dir)
-    w = Window.partitionBy("label").orderBy(rnd_col().asc(), F.col("event_id").asc())
-    assigned = df.select(
-        "event_id",
-        "label",
-        F.when(F.percent_rank().over(w) < 0.6, "train")
-        .when(F.percent_rank().over(w) < 0.8, "valid")
-        .otherwise("test")
-        .alias("split"),
-    )
-    assert assigned.count() == df.count()
-    assert assigned.select("event_id").distinct().count() == df.count()
-    per = {
-        (r["label"], r["split"]): r["n"]
-        for r in assigned.groupBy("label", "split").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    for label in (0, 1):
-        total = sum(v for (lbl, _), v in per.items() if lbl == label)
-        train = per.get((label, "train"), 0)
-        # percent_rank < 0.6 admits floor(0.6·(n-1)) + 1 rows
-        assert abs(train / total - 0.6) < 2.0 / total
+    """``etl.stratified_split_assign`` partitions each class to the
+    exact percent_rank fractions and covers every row exactly once
+    (X1), for the shower classes and for classes of 1 and 2 rows."""
+    small, _ = _small_classes(spark)
+    for df, rnd in ((shower_frame(spark, sf_dir), rnd_col()), (small, F.col("event_id") * 0.001)):
+        assigned = etl.stratified_split_assign(df, rnd)
+        assert assigned.columns == [*df.columns, "split"]
+        n = df.count()
+        assert assigned.count() == n
+        assert assigned.select("event_id").distinct().count() == n
+        per = {
+            (r["label"], r["split"]): r["n"]
+            for r in assigned.groupBy("label", "split").agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+        want = Counter()
+        for r in df.groupBy("label").agg(F.count(F.lit(1)).alias("n")).collect():
+            want.update((r["label"], s) for s in _split_by_rank(r["n"]))
+        assert per == want
 
 
 def test_survival_curve_monotone_ends_at_one(spark, sf_dir):
@@ -98,14 +111,21 @@ def test_survival_curve_monotone_ends_at_one(spark, sf_dir):
 
 
 def test_split_determinism_same_seed_same_assignment(spark, sf_dir):
-    """Same seed + same data ⇒ identical split assignment (X3)."""
+    """Same seed + same data ⇒ identical split assignment (X3), however
+    the input is partitioned; a constant draw ties every row, so the
+    ``event_id`` tie-break alone orders each class."""
     df = shower_frame(spark, sf_dir)
-    w = Window.partitionBy("label").orderBy(rnd_col().asc(), F.col("event_id").asc())
-    expr = F.when(F.percent_rank().over(w) < 0.6, "train").otherwise("other")
-    a = df.select("event_id", expr.alias("s1"))
-    b = df.select("event_id", expr.alias("s2"))
-    diff = a.join(b, "event_id").filter(F.col("s1") != F.col("s2"))
-    assert diff.count() == 0
+    a = etl.stratified_split_assign(df, rnd_col()).select("event_id", F.col("split").alias("s1"))
+    b = etl.stratified_split_assign(df.repartition(3), rnd_col()).select("event_id", F.col("split").alias("s2"))
+    joined = a.join(b, "event_id")
+    assert joined.count() == df.count()
+    assert joined.filter(F.col("s1") != F.col("s2")).count() == 0
+
+    small, ids = _small_classes(spark)
+    want = {e: s for es in ids.values() for e, s in zip(sorted(es), _split_by_rank(len(es)))}
+    for frame in (small, small.repartition(3), small.orderBy(F.col("event_id").desc())):
+        got = etl.stratified_split_assign(frame, F.lit(0.5)).select("event_id", "split").collect()
+        assert dict(got) == want
 
 
 def test_multimodal_real_codec_contract(spark, sf_dir):

@@ -44,13 +44,29 @@ def launch(prelude: str = "", extra_confs: dict | None = None, env: dict | None 
     ) + textwrap.dedent(prelude) + textwrap.dedent(
         f"""
         from pyspark import SparkContext
+        from pyspark.errors import utils as origin
+        from pyspark.sql import functions as F
         from {PKG}.registry import corpus
         from tests.oracle_utils import compare_frames, duckdb_con, exact_hash_problems
         spark = session.get_spark("test_session", shuffle_partitions=2, extra_confs={extra_confs!r})
         with open(f"/proc/{{SparkContext._gateway.proc.pid}}/maps") as f:
             mapped = sorted({{ln.split()[-1] for ln in f if ln.rstrip().endswith(".jsa")}})
         q = corpus()["etl_prepare_datasets"]
-        got = q.fn(spark, {SF_DIR!r}).toPandas()
+        # each captured call site is one PySparkCurrentOrigin set/clear pair
+        captures = []
+        _capture = origin._capture_call_site
+        def counted_capture(*args):
+            captures.append(args)
+            return _capture(*args)
+        origin._capture_call_site = counted_capture
+        df = q.fn(spark, {SF_DIR!r})
+        origin._capture_call_site = _capture
+        got = df.toPandas()
+        try:
+            spark.range(1).select(F.col("id") / F.lit(0)).collect()
+            error = ""
+        except Exception as e:
+            error = f"{{type(e).__name__}}: {{e}}"
         con = duckdb_con({SF_DIR!r})
         want = con.execute(q.oracle).fetchdf()
         con.close()
@@ -62,6 +78,8 @@ def launch(prelude: str = "", extra_confs: dict | None = None, env: dict | None 
             "probe_property": spark._jvm.System.getProperty("graft.probe"),
             "user_conf": spark.conf.get("spark.graft.userconf", None),
             "spark_conf_dir": os.environ.get("SPARK_CONF_DIR"),
+            "origin_captures": len(captures),
+            "error": error,
         }}
         spark.stop()
         print(json.dumps(report))
@@ -96,6 +114,17 @@ def test_get_spark_maps_the_archive(default_launch):
 
 def test_callers_extra_java_options_reach_the_jvm(default_launch):
     assert default_launch["probe_property"] == "caller"
+
+
+def test_dataframe_calls_capture_no_call_site(default_launch):
+    """PySpark's DataFrame debugging is off: building the chain's
+    ``etl_prepare_datasets`` captures no Python call site, so it makes
+    no ``PySparkCurrentOrigin`` round trips. A query error still names
+    its class and the DataFrame operation that raised it."""
+    assert default_launch["origin_captures"] == 0
+    error = default_launch["error"]
+    assert error.startswith("ArithmeticException: [DIVIDE_BY_ZERO]"), error[:500]
+    assert '== DataFrame ==\n"divide" was called from' in error, error[:500]
 
 
 @pytest.fixture(scope="module")
@@ -163,11 +192,13 @@ def test_stale_archive_whose_rebuild_fails_launches_plainly(cds_home):
 def test_user_conf_dir_keeps_the_plain_launch(tmp_path):
     """A conf dir with a real spark-defaults.conf is launched as
     before: its settings apply, no archive is built or mapped, and the
-    caller's SPARK_CONF_DIR is left as it was."""
+    caller's SPARK_CONF_DIR is left as it was. A caller who turns
+    DataFrame debugging back on gets the call sites captured."""
     conf = tmp_path / "conf"
     conf.mkdir()
     (conf / "spark-defaults.conf").write_text("spark.graft.userconf  kept\n")
-    r = launch(env={"SPARK_CONF_DIR": str(conf)})
+    r = launch(extra_confs={"spark.python.sql.dataFrameDebugging.enabled": "true"}, env={"SPARK_CONF_DIR": str(conf)})
+    assert r["origin_captures"] > 0
     assert r["user_conf"] == "kept"
     assert r["dumps"] == 0
     assert os.path.join(session.CDS_DIR, "spark.jsa") not in r["mapped"]

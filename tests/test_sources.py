@@ -194,7 +194,7 @@ def test_npz_stream_reader_incremental_pickup(spark, sf_dir):
     # writes its own a1/a2.npz into SCRATCH/npz_stream_drop, and a
     # concurrent harness run (plan generator, oracle sweep) executing
     # it mid-test would poison a shared drop directory (round-9 race:
-    # gen_plans.py wrote a 100-row gamma a2.npz between this test's
+    # a plan-dump run wrote a 100-row gamma a2.npz between this test's
     # two drains)
     drop = os.path.join(SCRATCH, "npz_streamtest_drop")
     ckpt = os.path.join(SCRATCH, "npz_streamtest_ckpt")
@@ -588,6 +588,18 @@ def _rewrite_events(sf_dir):
     pq.write_table(t, events)
 
 
+def _rewrite_lineitem(sf_dir):
+    """Rewrite ``lineitem.parquet`` in place with every line's price
+    doubled."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    lineitem = os.path.join(sf_dir, "lineitem.parquet")
+    t = pq.read_table(lineitem)
+    i = t.schema.get_field_index("l_extendedprice")
+    pq.write_table(t.set_column(i, "l_extendedprice", pc.multiply(t.column(i), 2)), lineitem)
+
+
 def _assert_oracle_exact(spark, name, d):
     from high_energy_gamma_ray_search_in_kascade_array_data_spark.registry import corpus
     from tests.oracle_utils import compare_frames, duckdb_con, exact_hash_problems
@@ -603,24 +615,25 @@ def _assert_oracle_exact(spark, name, d):
     assert not exact_hash_problems(spark_pdf, oracle_pdf), d
 
 
-FIXTURE_QUERIES = (
-    "partition_pruned_read",
-    "dynamic_partition_pruning_join",
-    "stream_late_data_accounting",
-    "stream_foreach_batch_upsert",
-)
+# each fixture query, and the in-place rewrite of the source it derives from
+FIXTURE_QUERIES = {
+    "partition_pruned_read": _rewrite_events,
+    "dynamic_partition_pruning_join": _rewrite_events,
+    "stream_late_data_accounting": _rewrite_events,
+    "stream_foreach_batch_upsert": _rewrite_events,
+    "bucketed_join_no_shuffle": _rewrite_lineitem,
+}
 
 
 @pytest.mark.parametrize("name", FIXTURE_QUERIES)
 def test_fixture_queries_follow_a_rewritten_source(spark, sf_copy, name):
     """A derived fixture must follow its source table, not just the SF
     tag. Run the query on a copy of the SF directory, then rewrite the
-    copy's events in place (same path, so the same tag; see
-    ``_rewrite_events``) and run it again: each answer must equal its
-    own DuckDB oracle."""
+    copy's source in place (same path, so the same tag) and run it
+    again: each answer must equal its own DuckDB oracle."""
     copy = sf_copy("copy")
     _assert_oracle_exact(spark, name, copy)
-    _rewrite_events(copy)
+    FIXTURE_QUERIES[name](copy)
     _assert_oracle_exact(spark, name, copy)
 
 
@@ -631,15 +644,9 @@ def test_same_named_sf_dirs_keep_their_own_fixtures(spark, sf_copy, name):
     own answer: the saved bucketed tables and the derived fixtures are
     keyed by ``scratch_tag``, which hashes the realpath, not by the
     basename alone."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
     a, b = sf_copy("a"), sf_copy("b")
     _rewrite_events(b)
-    lineitem = os.path.join(b, "lineitem.parquet")
-    t = pq.read_table(lineitem)
-    i = t.schema.get_field_index("l_extendedprice")
-    pq.write_table(t.set_column(i, "l_extendedprice", pc.multiply(t.column(i), 2)), lineitem)
+    _rewrite_lineitem(b)
     for d in (a, b, a):
         _assert_oracle_exact(spark, name, d)
 
